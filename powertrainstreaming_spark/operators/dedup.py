@@ -435,7 +435,7 @@ def _tau_pairs(toks: DataFrame) -> DataFrame:
     # (the minhash family's with_n trick): that widens the OCCURRENCE-
     # proportional token exchange by 8 B/row to delete only this DOC-
     # proportional, map-side-partial-aggregated exchange — [MEASURED
-    # round 12, scripts/probe_tau_ncarry.py] parity at sf0.1 and a
+    # round 12, OPTIMIZATION_r12.md §9] parity at sf0.1 and a
     # clear LOSS at 10× (cands 3.74 → 4.65 s, full op 9.30 → 14.28 s,
     # outputs exceptAll-equal both ways).  The two families differ
     # because minhash computes n inside an aggregate it ALREADY runs
@@ -2361,10 +2361,10 @@ def dedup_embedding_cluster_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a property test, along with τ-consistency across shared probe
     blocks.
 
-    Plan: collapse → train → top-2 assign (broadcast crossJoin at
-    fixture k; GEMM at adaptive k — see _assign_cells_top2), explode
-    each vector to its ≤ 2 probe cells, ONE equi-join on the probe
-    cell (plan-asserted never-cartesian).  Blow-up bound: candidate
+    Plan: collapse → train → top-2 assign (the GEMM argsort, taken by
+    every call that passes ``cent_list`` — see _assign_cells_top2),
+    explode each vector to its ≤ 2 probe cells, ONE equi-join on the
+    probe cell (plan-asserted never-cartesian).  Blow-up bound: candidate
     rows ≤ Σ over cells of (|cell| + |2nd-probe members|)² ≈ 4× the
     base op's Σ|cell|², still linear in n under the _adaptive_k
     ladder.  A pair sharing BOTH probe cells would surface twice, so

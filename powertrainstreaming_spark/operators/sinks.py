@@ -30,7 +30,11 @@ from pyspark.sql import functions as F
 from powertrainstreaming_spark.functions.exprs import money_sum, o_money_sum
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
-from powertrainstreaming_spark.streaming.harness import events_stream
+from powertrainstreaming_spark.streaming.harness import (
+    events_stream,
+    run_available_now,
+    run_bounded,
+)
 
 _AGG_ORACLE = f"""
     SELECT o_orderstatus, o_orderpriority,
@@ -86,13 +90,12 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").partitionBy("event_type").parquet(out)
 
-    q = (
-        filtered.writeStream.foreachBatch(_write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-        .start()
+    run_available_now(
+        spark,
+        filtered.writeStream.foreachBatch(_write_batch).option(
+            "checkpointLocation", os.path.join(out, "_checkpoint")
+        ),
     )
-    q.awaitTermination()
     return spark.read.parquet(out).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -117,17 +120,10 @@ def sink_memory_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events_stream(spark, sf_dir)
     agg = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
-    console_q = (
-        agg.writeStream.format("console")
-        .outputMode("complete")
-        .option("numRows", 5)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark,
+        agg.writeStream.format("console").outputMode("complete").option("numRows", 5),
     )
-    console_q.awaitTermination()
-
-    from powertrainstreaming_spark.streaming.harness import run_bounded
-
     return run_bounded(agg, "complete")
 
 

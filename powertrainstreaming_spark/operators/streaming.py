@@ -31,6 +31,7 @@ from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load, table_path
 from powertrainstreaming_spark.streaming.harness import (
     events_stream,
+    run_available_now,
     run_bounded,
     staged_events_stream,
 )
@@ -1056,13 +1057,12 @@ def stream_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(out)
 
-    q = (
-        sdf.writeStream.foreachBatch(_clean_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-        .start()
+    run_available_now(
+        spark,
+        sdf.writeStream.foreachBatch(_clean_batch).option(
+            "checkpointLocation", os.path.join(out, "_checkpoint")
+        ),
     )
-    q.awaitTermination()
     return spark.read.parquet(out).select(
         "doc_id", "n_tokens", "n_removed", "clean_text"
     )

@@ -14,6 +14,30 @@ partitioned parquet (see ``stream_foreachbatch_sink``) — state stays
 bounded via watermarks, and the same transformation graph is reused
 unchanged because everything below the sink is a plain DataFrame
 lineage.
+
+State-partition rule: every stream starts through ``run_available_now``,
+which starts the query with ``spark.sql.shuffle.partitions`` =
+min(session value, ``defaultParallelism``) and restores the caller's
+value once ``start()`` returns or raises.  A stateful query runs one
+state-store instance per shuffle partition for its whole checkpoint
+lifetime (the count is written into the offset log at the first batch),
+and streaming gets no AQE coalescing, so the batch default of 32
+partitions on a 4-slot ``local[4]`` meant 32 instances per micro-batch,
+each paying its own HDFS-backed delta commit.  The pin never raises the
+count and never exceeds the task slots: tests (8 on ``local[4]``) run 4,
+the benchmark's ``local[4]`` at 32 runs 4, a vanilla session (200) on
+``local[8]`` runs 8, a cluster runs min(200, total cores).  Batch paths
+keep their partition count and AQE coalescing.
+
+Measured with perfbench's ``telemetry_stream`` workload (4 vCPUs; two
+10k-event slices through the watermarked tumbling, session and dedup
+replays plus a stateless stream-static join; ten seeds per side,
+alternated): reference CPU seconds per pass, median 54.0 -> 22.0 s
+(-59 %, lower on 10 of 10 pairs).  One traced run per side: 32 -> 4
+state-store instances, state commit 7956 -> 538.5 ms, addBatch
+3691 -> 529 ms, p50 micro-batch 4194.5 -> 834.5 ms.  The built-in
+RocksDB provider with changelog checkpointing, tried on top of the
+pin, was no faster (21.9 and 22.6 s per pass) and is not used.
 """
 
 from __future__ import annotations
@@ -22,6 +46,7 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from powertrainstreaming_spark.scratch import scratch_dir
 from powertrainstreaming_spark.session import ensure_session_confs
@@ -97,6 +122,26 @@ def staged_events_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
     return shim_events_ts(sdf, stage_dir)
 
 
+def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Start ``writer`` with ``Trigger.AvailableNow`` and block until it
+    has processed everything in its source; the one start path of every
+    stream in the package.
+
+    The query starts with at most one shuffle (= state) partition per
+    task slot (module doc).  The stream clones the session conf inside
+    ``start()``, so the caller's value is restored as soon as it
+    returns, and also when it raises.
+    """
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(caller), spark.sparkContext.defaultParallelism)))
+    try:
+        query = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, caller)
+    query.awaitTermination()
+
+
 def run_bounded(
     transformed: DataFrame,
     output_mode: str = "complete",
@@ -106,13 +151,8 @@ def run_bounded(
     ``Trigger.AvailableNow`` processes everything currently in the
     source then stops; the memory sink table holds the final answer.
     """
+    spark = transformed.sparkSession
     name = f"pts_mem_{next(_MEMORY_SINK_COUNTER)}"
-    query = (
-        transformed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return transformed.sparkSession.table(name)
+    writer = transformed.writeStream.format("memory").queryName(name)
+    run_available_now(spark, writer.outputMode(output_mode))
+    return spark.table(name)

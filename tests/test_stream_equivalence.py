@@ -37,7 +37,11 @@ def test_session_stream_equals_batch(spark):
     assert _hash_df(s) == _hash_df(b)
 
 
+import json
+import threading
+
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from powertrainstreaming_spark.operators.streaming import (
     collapse_running_sink,
@@ -50,6 +54,7 @@ from powertrainstreaming_spark.operators.streaming import (
     watermark_late_transform,
 )
 from powertrainstreaming_spark.streaming.harness import (
+    events_stream,
     run_bounded,
     stage_events_nway,
     staged_events_stream,
@@ -116,6 +121,63 @@ def test_nway_split_is_batch_equivalent(spark, case, n_files):
     if collapse is not None:
         out = collapse(out)
     assert _hash_df(out) == _nway_reference(spark, case)
+
+
+class _StateProgress(StreamingQueryListener):
+    """Progress events of a query and its termination (listener events
+    arrive asynchronously, after ``run_bounded`` returns)."""
+
+    def __init__(self):
+        self.progress: list[dict] = []
+        self.terminated = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.progress.append(json.loads(event.progress.json))
+
+    def onQueryTerminated(self, event):
+        self.terminated.set()
+
+
+def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
+    """run_bounded starts a stateful query with min(session shuffle
+    partitions, task slots) state partitions: every state operator of
+    every micro-batch reports that many shuffle partitions AND that many
+    state-store instances, the rows still equal the batch twin, and the
+    session's own shuffle-partition setting reads the same afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    expected = min(int(before), spark.sparkContext.defaultParallelism)
+    listener = _StateProgress()
+    spark.streams.addListener(listener)
+    try:
+        s = stream_tumbling_agg(spark, SF)
+        assert listener.terminated.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.conf.get(key) == before
+    ops = [op for p in listener.progress for op in p.get("stateOperators", [])]
+    assert ops, "the tumbling replay reported no state operator"
+    for op in ops:
+        assert op["numShufflePartitions"] == expected, op
+        assert op["numStateStoreInstances"] == expected, op
+    assert _hash_df(s) == _hash_df(tumbling_batch(spark, SF))
+
+
+def test_failed_start_restores_shuffle_partitions(spark):
+    """The pin is undone even when the writer fails to start: append
+    mode on an aggregation without a watermark is rejected inside
+    start()."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    agg = events_stream(spark, SF).groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        run_bounded(agg, "append")
+    assert spark.conf.get(key) == before
 
 
 def test_foreachbatch_checkpoint_restart_exactly_once(spark, tmp_path):
