@@ -307,6 +307,7 @@ def run_span_index(spark, stage: str) -> list[str]:
     )
     from powertrainstreaming_spark.scratch import scratch_dir
     from powertrainstreaming_spark.sources.loaders import TABLE_DDL
+    from powertrainstreaming_spark.streaming.harness import run_available_now
 
     corpus = spark.read.parquet(stage).select("doc_id", "text")
     schema = TABLE_DDL["documents"] + ", event_ts timestamp"
@@ -330,16 +331,14 @@ def run_span_index(spark, stage: str) -> list[str]:
             ).parquet(_out)
 
         t0 = time.perf_counter()
-        q = (
+        run_available_now(
+            spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(stage)
             .writeStream.foreachBatch(_clean)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(out, "_ckpt"))
-            .start()
+            .option("checkpointLocation", os.path.join(out, "_ckpt")),
         )
-        q.awaitTermination()
         wall = time.perf_counter() - t0
         n = spark.read.parquet(out).count()
         rows.append(

@@ -7,7 +7,7 @@ fixtures) and times representative operators at 1× vs 10×.  An
 operator whose wall-clock grows ≲ linearly with input is holding its
 contract; anything super-linear is a plan bug.
 
-    python scripts/scale_probe.py          # writes docs/SCALE.md table
+    python scripts/scale_probe.py          # rewrites docs/SCALE.md's 10× section
 
 Correctness at 10× is NOT re-checked here (no oracle at this scale);
 this is a performance-shape probe only.
@@ -135,10 +135,10 @@ def stage_10x(
 
 
 def main(only: list[str] | None = None) -> None:
-    """Full 10× table rewrite, or — with `only` — time just those ops
+    """Full 10× section rewrite, or — with `only` — time just those ops
     and splice their rows into the EXISTING docs/SCALE.md 10× table
-    (replacing a same-named row if present), leaving the 100×/1000×
-    sections untouched:
+    (replacing a same-named row if present); either way the rest of
+    docs/SCALE.md is left untouched:
 
         python scripts/scale_probe.py                 # full rewrite
         python scripts/scale_probe.py 10 op1 op2 ...  # splice rows
@@ -310,7 +310,14 @@ def main(only: list[str] | None = None) -> None:
                 doc.insert(end + 1, row)
         Path("docs/SCALE.md").write_text("\n".join(doc) + "\n")
     else:
-        Path("docs/SCALE.md").write_text("\n".join(lines + rows) + "\n")
+        # replace the 10× section only; the design argument before it
+        # and the later tiers stay
+        doc = Path("docs/SCALE.md").read_text()
+        start = doc.index("# 10× scale probe")
+        end = doc.find("\n# ", start)
+        tail = doc[end:] if end != -1 else ""
+        section = "\n".join(lines + rows) + "\n"
+        Path("docs/SCALE.md").write_text(doc[:start] + section + tail)
     shutil.rmtree(big, ignore_errors=True)
     print("wrote docs/SCALE.md")
 

@@ -54,7 +54,9 @@ from powertrainstreaming_spark.operators.streaming import (
     watermark_late_transform,
 )
 from powertrainstreaming_spark.streaming.harness import (
+    _checkpoints_are_local,
     events_stream,
+    run_available_now,
     run_bounded,
     stage_events_nway,
     staged_events_stream,
@@ -141,15 +143,10 @@ class _StateProgress(StreamingQueryListener):
         self.terminated.set()
 
 
-def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
-    """run_bounded starts a stateful query with min(session shuffle
-    partitions, task slots) state partitions: every state operator of
-    every micro-batch reports that many shuffle partitions AND that many
-    state-store instances, the rows still equal the batch twin, and the
-    session's own shuffle-partition setting reads the same afterwards."""
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    expected = min(int(before), spark.sparkContext.defaultParallelism)
+def _assert_tumbling_state_instances(spark, expected: int) -> None:
+    """Every state operator of every micro-batch of the tumbling replay
+    reports ``expected`` shuffle partitions AND that many state-store
+    instances, and the rows still equal the batch twin."""
     listener = _StateProgress()
     spark.streams.addListener(listener)
     try:
@@ -157,7 +154,6 @@ def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
         assert listener.terminated.wait(60)
     finally:
         spark.streams.removeListener(listener)
-    assert spark.conf.get(key) == before
     ops = [op for p in listener.progress for op in p.get("stateOperators", [])]
     assert ops, "the tumbling replay reported no state operator"
     for op in ops:
@@ -166,18 +162,117 @@ def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
     assert _hash_df(s) == _hash_df(tumbling_batch(spark, SF))
 
 
+def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
+    """run_bounded starts a stateful query with min(session shuffle
+    partitions, task slots) state partitions, and the session's own
+    shuffle-partition setting reads the same afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    expected = min(int(before), spark.sparkContext.defaultParallelism)
+    _assert_tumbling_state_instances(spark, expected)
+    assert spark.conf.get(key) == before
+
+
+def test_state_pin_on_a_session_without_shuffle_partitions(spark):
+    """A session that never set the shuffle partitions (a vanilla
+    session) pins against Spark's default of 200, and the key is unset
+    again afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    fixture = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key, None) is None
+        default = int(spark.conf.get(key))
+        assert default == 200
+        _assert_tumbling_state_instances(
+            spark, min(default, spark.sparkContext.defaultParallelism)
+        )
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, fixture)
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FS_MANAGER = _MANAGERS + "FileSystemBasedCheckpointFileManager"
+_FC_MANAGER = _MANAGERS + "FileContextBasedCheckpointFileManager"
+
+
+def _stream_checkpoint_manager(spark, ckpt: str) -> set:
+    """The checkpoint manager class a ``run_available_now`` start on
+    ``ckpt`` ran with, read inside each micro-batch from the stream's
+    own session conf: the stream clones the session at ``start()`` and
+    builds its checkpoint manager from that clone's conf."""
+    seen = []
+
+    def record(batch_df, batch_id: int) -> None:
+        seen.append(batch_df.sparkSession.conf.get(_MANAGER_KEY, None))
+
+    sdf = events_stream(spark, SF).select("event_id")
+    run_available_now(
+        spark,
+        sdf.writeStream.foreachBatch(record).option("checkpointLocation", ckpt),
+    )
+    assert seen, "the stream ran no micro-batch"
+    return set(seen)
+
+
+def test_local_checkpoint_start_uses_filesystem_manager(spark, tmp_path):
+    """A start on a local checkpoint runs with Spark's FileSystem-based
+    checkpoint manager, and the session, which never set the key, still
+    has it unset afterwards."""
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    assert _stream_checkpoint_manager(spark, str(tmp_path / "ckpt")) == {
+        _FS_MANAGER
+    }
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+
+
+def test_caller_checkpoint_manager_is_kept(spark, tmp_path):
+    """A manager class the caller set is neither overridden for the
+    stream nor lost from the session."""
+    spark.conf.set(_MANAGER_KEY, _FC_MANAGER)
+    try:
+        assert _stream_checkpoint_manager(spark, str(tmp_path / "ckpt")) == {
+            _FC_MANAGER
+        }
+        assert spark.conf.get(_MANAGER_KEY, None) == _FC_MANAGER
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
+
+
+def test_checkpoint_manager_pin_needs_a_local_default_fs(spark):
+    """Unqualified checkpoint paths count as local only while the
+    default FS is ``file``; on any other default FS the pin is off."""
+    assert _checkpoints_are_local(spark)
+    spark.conf.set("fs.defaultFS", "hdfs://localhost:9000")
+    try:
+        assert not _checkpoints_are_local(spark)
+    finally:
+        spark.conf.unset("fs.defaultFS")
+    assert _checkpoints_are_local(spark)
+
+
 def test_failed_start_restores_shuffle_partitions(spark):
-    """The pin is undone even when the writer fails to start: append
+    """The pins are undone even when the writer fails to start: append
     mode on an aggregation without a watermark is rejected inside
-    start()."""
+    start().  The shuffle partitions read the same, an unset checkpoint
+    manager stays unset, and a caller's manager class stays set."""
     from pyspark.errors import AnalysisException
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     agg = events_stream(spark, SF).groupBy("event_type").count()
-    with pytest.raises(AnalysisException):
-        run_bounded(agg, "append")
-    assert spark.conf.get(key) == before
+    try:
+        for caller in (None, _FC_MANAGER):
+            if caller is not None:
+                spark.conf.set(_MANAGER_KEY, caller)
+            with pytest.raises(AnalysisException):
+                run_bounded(agg, "append")
+            assert spark.conf.get(key) == before
+            assert spark.conf.get(_MANAGER_KEY, None) == caller
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
 
 
 def test_foreachbatch_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -215,13 +310,12 @@ def test_foreachbatch_checkpoint_restart_exactly_once(spark, tmp_path):
         def write_batch(batch_df, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(out)
 
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            spark,
+            sdf.writeStream.foreachBatch(write_batch).option(
+                "checkpointLocation", ckpt
+            ),
         )
-        q.awaitTermination()
 
     pq.write_table(table.slice(0, third), os.path.join(stage, "a.parquet"))
     pq.write_table(table.slice(third, third), os.path.join(stage, "b.parquet"))
@@ -361,13 +455,12 @@ def test_scd2_state_survives_checkpoint_restart(spark, tmp_path):
         def write_batch(batch_df, batch_id: int) -> None:
             batch_df.write.mode("append").parquet(out)
 
-        q = (
-            changes.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            spark,
+            changes.writeStream.foreachBatch(write_batch).option(
+                "checkpointLocation", ckpt
+            ),
         )
-        q.awaitTermination()
 
     pq.write_table(table.slice(0, third), os.path.join(stage, "a.parquet"))
     pq.write_table(table.slice(third, third), os.path.join(stage, "b.parquet"))
