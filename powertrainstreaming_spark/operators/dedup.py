@@ -2272,8 +2272,9 @@ def dedup_embedding_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the deterministic Lloyd's trainer (shared _train_centroids —
     model-sized codebook, O(1)-in-corpus driver collect; trained on
     DISTINCT vectors so duplicate mass cannot drag centroids),
-    broadcast nearest-centroid assign, one within-cell self-join whose
-    ONLY equi-key is the cell (plan-asserted: never a cartesian),
+    map-only nearest-centroid assign (_assign_cells), one within-cell
+    self-join whose ONLY equi-key is the cell (plan-asserted: never a
+    cartesian),
     left-anti removal keyed on vec_id.  The cell count is
     DATA-ADAPTIVE: k = _adaptive_k(#distinct reps) doubles along the
     _ADAPT_LADDER exactly like the LSH cell modulus, so EXPECTED cell
@@ -2298,9 +2299,9 @@ def dedup_embedding_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     reps = _sem_reps(emb)
-    cents = _train_centroids(spark, reps, k=_adaptive_k(reps.count()))
+    cents = _train_centroids(reps, k=_adaptive_k(reps.count()))
     cents_df = spark.createDataFrame(cents, "cent_id int, c_emb array<double>")
-    cells = _assign_cells(reps, cents_df, cent_list=cents)
+    cells = _assign_cells(reps, cents)
     scored = cells.join(
         F.broadcast(cents_df), cells.cell == cents_df.cent_id
     ).select(
@@ -2352,8 +2353,8 @@ def dedup_embedding_cluster_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same policy as the base op, wider candidate view: key order is
     (c_sim to the PRIMARY centroid, vec_id) — identical to the base
-    op's, since _assign_cells_top2's `cell` matches _assign_cells
-    bit-for-bit — and vector b is dropped iff SOME vector a sharing
+    op's, since both read `cell` from the same _assign_cells call —
+    and vector b is dropped iff SOME vector a sharing
     ANY of the two probe cells has an earlier key and cos(a, b) ≥ τ.
     The candidate set is a SUPERSET of the base op's (same primary
     cell ⇒ shared probe cell), and one-shot drops are monotone in the
@@ -2361,8 +2362,9 @@ def dedup_embedding_cluster_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a property test, along with τ-consistency across shared probe
     blocks.
 
-    Plan: collapse → train → top-2 assign (the GEMM argsort, taken by
-    every call that passes ``cent_list`` — see _assign_cells_top2),
+    Plan: collapse → train → assign (_assign_cells, whose `cell2` is
+    the second-nearest cell; on a one-centroid codebook `cell2 = cell`
+    and the `distinct()` on drops absorbs the doubled probe row),
     explode each vector to its ≤ 2 probe cells, ONE equi-join on the
     probe cell (plan-asserted never-cartesian).  Blow-up bound: candidate
     rows ≤ Σ over cells of (|cell| + |2nd-probe members|)² ≈ 4× the
@@ -2378,15 +2380,15 @@ def dedup_embedding_cluster_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from powertrainstreaming_spark.functions.exprs import dot_f, sim_round
     from powertrainstreaming_spark.operators.similarity import (
         _adaptive_k,
-        _assign_cells_top2,
+        _assign_cells,
         _train_centroids,
     )
 
     emb = load(spark, sf_dir, "embeddings")
     reps = _sem_reps(emb)
-    cents = _train_centroids(spark, reps, k=_adaptive_k(reps.count()))
+    cents = _train_centroids(reps, k=_adaptive_k(reps.count()))
     cents_df = spark.createDataFrame(cents, "cent_id int, c_emb array<double>")
-    cells = _assign_cells_top2(reps, cents_df, cent_list=cents)
+    cells = _assign_cells(reps, cents)
     scored = cells.join(
         F.broadcast(cents_df), cells.cell == cents_df.cent_id
     ).select(

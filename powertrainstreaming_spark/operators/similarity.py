@@ -494,65 +494,37 @@ def _adaptive_k(n: int) -> int:
 
 
 def _assign_cells(
-    emb: DataFrame,
-    cents: DataFrame,
-    cent_list: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the (tiny) codebook,
-    argmax cosine via a struct-max aggregate — one map-side join plus
-    one groupBy on vec_id, no row explosion survives the shuffle.
-
-    Whenever the caller has the codebook as a plain list (every
-    trainer iteration and the cluster ops' final assigns), the
-    crossJoin form is replaced by an Arrow-batched GEMM assign
-    (_assign_cells_gemm): the crossJoin materializes n·k rows with an
-    interpreted dot each, and with k ∝ n (the _adaptive_k ladder)
-    that is the NEXT quadratic term after the pair work is fixed —
-    the round-11 perturbed probe measured the 100×/k=2048 trainer at
-    1351 s, wholly assign-bound.  FAISS spends the same n·k FLOPs but
-    at BLAS speed; mapInPandas over the broadcast numpy codebook is
-    the Spark-first equivalent (map-only, no shuffle at all —
-    strictly better than the crossJoin's groupBy).  Tie-break parity:
-    among equal sims the struct-max takes the HIGHEST cent_id; the
-    GEMM path's last-argmax does the same.  Float summation order
-    differs from the fold (BLAS vs sequential), so a vanishingly-
-    near-tie could assign differently — round 12 lowered the gate
-    from k > _KM_K to ANY cent_list (the round-11 verdict's task #6)
-    and the golden snapshots came out BIT-IDENTICAL (update_golden
-    produced an empty diff), so no fixture near-tie exists;
-    test_gemm_assign_matches_structmax_assign pins the parity."""
-    if cent_list is not None:
-        return _assign_cells_gemm(emb, cent_list)
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "label",
-        "embedding",
-        "cent_id",
-        dot_f("embedding", "c_emb").alias("c_sim"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.max(F.struct(F.col("c_sim"), F.col("cent_id"))).alias("best"),
-        F.first("label").alias("label"),
-        F.first("embedding").alias("embedding"),
-    )
-    return best.select(
-        "vec_id", "label", "embedding", F.col("best.cent_id").alias("cell")
-    )
-
-
-def _assign_cells_gemm(
     emb: DataFrame, cent_list: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """Vectorized nearest-centroid assign: one numpy GEMM per Arrow
-    batch against the closure-captured codebook (k × d doubles —
-    model-sized, broadcast with the task closure).  Map-only: no
-    crossJoin, no shuffle, output schema identical to the struct-max
-    form."""
+    """The one nearest-centroid assign: every vector's nearest and
+    second-nearest codebook cell, as ``vec_id, label, embedding, cell,
+    cell2``.  One numpy GEMM per Arrow batch (``mapInPandas``) against
+    the closure-captured codebook (k × d doubles — model-sized, shipped
+    with the task closure): map-only, no join, no shuffle.  A crossJoin
+    form would materialize n·k rows with an interpreted dot each, and
+    with k ∝ n (the _adaptive_k ladder) that is quadratic — the
+    round-11 perturbed probe measured such a trainer at 1351 s for
+    k = 2048 × 200k vectors, wholly assign-bound.
+
+    Order is (sim desc, cent_id desc): `cell` is the last-argmax, so
+    among equal sims the HIGHEST cent_id wins; `cell2` is the
+    last-argmax once `cell` is masked out, i.e. the next cell in the
+    same order.  Every caller gets `cell2` (one O(k) argmax per row
+    beside the O(d·k) GEMM); the multi-probe dedup op is the one that
+    reads it.  A one-centroid codebook has no second cell, so there
+    `cell2 = cell` (the masked row is all −inf and its last-argmax is
+    the only column) — k = 1 happens whenever the trainer sees one
+    distinct vector, since it initialises from the k smallest vec_ids.
+    Sims are BLAS sums, not ``dot_f``'s sequential fold, so a
+    last-ulp near-tie could in principle rank differently from a
+    SQL-side dot; test_assign_cells_matches_sequential_fold_reference
+    pins both cells against the fold on a codebook with forced ties."""
     import numpy as np
 
     order = sorted(cent_list)
     ids = np.array([cid for cid, _ in order], dtype=np.int64)
     C = np.array([c for _, c in order], dtype=np.float64)
+    k = len(order)
 
     def assign(batches):
         import pandas as pd
@@ -562,137 +534,55 @@ def _assign_cells_gemm(
                 continue
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             sims = E @ C.T
-            # last-argmax = highest cent_id among ties (struct-max parity)
-            best = sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
+            # last-argmax = highest cent_id among ties
+            best = k - 1 - np.argmax(sims[:, ::-1], axis=1)
+            sims[np.arange(len(sims)), best] = -np.inf
+            second = k - 1 - np.argmax(sims[:, ::-1], axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "label": pdf["label"],
                     "embedding": pdf["embedding"],
                     "cell": ids[best].astype("int32"),
+                    "cell2": ids[second].astype("int32"),
                 }
             )
 
     return emb.mapInPandas(
-        assign, schema="vec_id bigint, label int, embedding array<float>, cell int"
-    )
-
-
-def _assign_cells_top2(
-    emb: DataFrame,
-    cents: DataFrame,
-    cent_list: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """TWO-nearest-centroid assignment — the multi-probe twin of
-    ``_assign_cells`` for `dedup_embedding_cluster_mp`: same codebook,
-    same key discipline, but every vector also carries its
-    SECOND-nearest cell so a τ-pair straddling one k-means boundary
-    still shares a probe block (the `sim_pair_multiprobe` idea applied
-    to trained cells; the round-11 miss-rate receipt in docs/SCALE.md
-    measured 73-80% of exhaustive ≥ τ pairs straddling single cells on
-    the fixtures, which is what this assignment exists to recover).
-
-    `cell` is IDENTICAL to ``_assign_cells``' choice — descending
-    (c_sim, cent_id) struct order, so ties take the highest cent_id —
-    which keeps the mp op's key order (c_sim to the PRIMARY centroid,
-    vec_id) aligned with the base op's.  `cell2` is the next struct in
-    that order; k ≥ 2 always (k starts at _KM_K), so it exists.
-    Fixture path (k ≤ _KM_K): one broadcast crossJoin + a
-    collect_list/array_sort top-2 per vec — the k-struct array is
-    codebook-sized, never corpus-sized.  Adaptive path (k > _KM_K):
-    the GEMM assign's stable-ascending argsort, last two columns —
-    identical tie-break by construction (stable ascending sort leaves
-    equal sims in ascending cent-index order, so the tail is the
-    highest cent_id).  Round 12: gate lowered from k > _KM_K to ANY
-    cent_list call, same as _assign_cells (task #6) — goldens
-    regenerated bit-identical, so the fixture path exercises the GEMM
-    argsort and the crossJoin top-2 survives only for callers without
-    a codebook list."""
-    if cent_list is not None:
-        import numpy as np
-
-        order = sorted(cent_list)
-        ids = np.array([cid for cid, _ in order], dtype=np.int64)
-        C = np.array([c for _, c in order], dtype=np.float64)
-
-        def assign2(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                sims = E @ C.T
-                rank = np.argsort(sims, axis=1, kind="stable")
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "label": pdf["label"],
-                        "embedding": pdf["embedding"],
-                        "cell": ids[rank[:, -1]].astype("int32"),
-                        "cell2": ids[rank[:, -2]].astype("int32"),
-                    }
-                )
-
-        return emb.mapInPandas(
-            assign2,
-            schema=(
-                "vec_id bigint, label int, embedding array<float>, "
-                "cell int, cell2 int"
-            ),
-        )
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "label",
-        "embedding",
-        "cent_id",
-        dot_f("embedding", "c_emb").alias("c_sim"),
-    )
-    best2 = scored.groupBy("vec_id").agg(
-        F.reverse(
-            F.array_sort(F.collect_list(F.struct("c_sim", "cent_id")))
-        ).alias("ranked"),
-        F.first("label").alias("label"),
-        F.first("embedding").alias("embedding"),
-    )
-    return best2.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.col("ranked")[0]["cent_id"].alias("cell"),
-        F.col("ranked")[1]["cent_id"].alias("cell2"),
+        assign,
+        schema=(
+            "vec_id bigint, label int, embedding array<float>, "
+            "cell int, cell2 int"
+        ),
     )
 
 
 def _train_centroids(
-    spark: SparkSession, emb: DataFrame, k: int = _KM_K
+    emb: DataFrame, k: int = _KM_K
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's training.
 
     Init = the k smallest vec_ids' embeddings (no RNG; default
     k = _KM_K, the fixture-pinned codebook size — pass
-    _adaptive_k(n) to scale the cell count with the corpus).  Each
-    round: assign (broadcast join, above), then recompute every
-    centroid component as an EXACT decimal mean over a
-    posexplode → groupBy (cent, pos) aggregate — order-insensitive,
-    so the trained codebook is bit-identical run to run and the
-    operator is golden-snapshot-able.  The codebook is model-sized
+    _adaptive_k(n) to scale the cell count with the corpus; a corpus
+    of fewer than k vectors trains fewer than k centroids).  Each
+    round: assign against the current codebook list (_assign_cells,
+    the map-only GEMM above), then recompute every centroid component
+    as an EXACT decimal mean over a posexplode → groupBy (cent, pos)
+    aggregate — order-insensitive, so the trained codebook is
+    bit-identical run to run and the operator is golden-snapshot-able.
+    The codebook is model-sized
     (k × dim doubles): collecting it to the driver is O(1) in the
     data, the same at 100 TB as at sf0.001.  Scale-up swaps: k-means||
     init and mini-batch updates keep the identical DataFrame shapes.
-    At adaptive k (> _KM_K) each iteration's assign runs the GEMM path
-    (see _assign_cells) — the round-11 probe measured the crossJoin
-    trainer at 1351 s for k = 2048 × 200k vectors, assign-bound.
     """
     dim = len(emb.select("embedding").first()[0])
     init = emb.orderBy("vec_id").limit(k).collect()
     cents = [
         (i, [float(x) for x in r.embedding]) for i, r in enumerate(init)
     ]
-    schema = "cent_id int, c_emb array<double>"
     for _ in range(_KM_ITERS):
-        cents_df = spark.createDataFrame(cents, schema)
-        assigned = _assign_cells(emb, cents_df, cent_list=cents)
+        assigned = _assign_cells(emb, cents)
         comp = (
             assigned.select("cell", F.posexplode("embedding").alias("pos", "v"))
             .groupBy("cell", "pos")
@@ -731,10 +621,8 @@ def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     are property-tested in tests/test_properties.py.
     """
     emb = load(spark, sf_dir, "embeddings")
-    cents = _train_centroids(spark, emb)
-    cells = _assign_cells(
-        emb, spark.createDataFrame(cents, "cent_id int, c_emb array<double>")
-    )
+    cents = _train_centroids(emb)
+    cells = _assign_cells(emb, cents)
     probe_emb = [
         float(x)
         for x in emb.filter(F.col("vec_id") == _PROBE_VEC_ID)
@@ -793,9 +681,9 @@ def _pq_subvectors(emb: DataFrame) -> DataFrame:
 def _pq_assign(subs: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid per (vec_id, sub_id) in L2, via the MIPS
     identity argmin ||x-c||² = argmax (x·c − ||c||²/2): one dot_f per
-    (row × K) against a broadcast codebook, then a struct-max — the
-    same shape as the IVF assigner above.  Ties break to the higher
-    cent_id (struct max), deterministically."""
+    (row × K) against a broadcast codebook joined on sub_id, then a
+    struct-max.  Ties break to the higher cent_id (struct max),
+    deterministically — the same rule as _assign_cells."""
     scored = subs.join(F.broadcast(cents), "sub_id").select(
         "vec_id",
         "sub_id",
@@ -988,7 +876,8 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     code budget.
 
     Index build (once per corpus): coarse k-means (the shared
-    ``_train_centroids``), assign every vector a cell, subtract its
+    ``_train_centroids``), assign every vector a cell (the shared
+    ``_assign_cells``), subtract its
     centroid (one broadcast join + zip_with per corpus row — a
     vector-width column op, not pair work), then train the shared
     residual codebooks and pack 4-bit codes (the shared ``_pq_train``
@@ -1014,11 +903,11 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     are property-tested in tests/test_properties.py.
     """
     emb = load(spark, sf_dir, "embeddings")
-    coarse = _train_centroids(spark, emb)
+    coarse = _train_centroids(emb)
     coarse_df = spark.createDataFrame(
         coarse, "cent_id int, c_emb array<double>"
     )
-    cells = _assign_cells(emb, coarse_df)
+    cells = _assign_cells(emb, coarse)
     resid = (
         cells.join(
             F.broadcast(

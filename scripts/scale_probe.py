@@ -571,10 +571,9 @@ def main_semdedup() -> None:
         reps = _sem_reps(load(spark, sf_dir, "embeddings"))
         n = reps.count()
         k = k_fn(n)
-        cents = sim._train_centroids(spark, reps, k=k)
-        cents_df = spark.createDataFrame(cents, "cent_id int, c_emb array<double>")
+        cents = sim._train_centroids(reps, k=k)
         hist = (
-            sim._assign_cells(reps, cents_df, cent_list=cents)
+            sim._assign_cells(reps, cents)
             .groupBy("cell")
             .count()
         )
@@ -665,20 +664,16 @@ def main_semdedup_mp() -> None:
         reps = _sem_reps(load(spark, sf_dir, "embeddings"))
         n = reps.count()
         k = sim._adaptive_k(n)
-        cents = sim._train_centroids(spark, reps, k=k)
-        cents_df = spark.createDataFrame(
-            cents, "cent_id int, c_emb array<double>"
-        )
-        top2 = sim._assign_cells_top2(reps, cents_df, cent_list=cents)
+        cents = sim._train_centroids(reps, k=k)
+        cells = sim._assign_cells(reps, cents)
         base_pairs = int(
-            sim._assign_cells(reps, cents_df, cent_list=cents)
-            .groupBy("cell")
+            cells.groupBy("cell")
             .count()
             .agg(F.sum(F.col("count") * (F.col("count") - 1) / 2))
             .collect()[0][0]
         )
         mp_pairs = int(
-            top2.select(
+            cells.select(
                 F.explode(F.array("cell", "cell2")).alias("pcell")
             )
             .groupBy("pcell")

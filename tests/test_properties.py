@@ -2431,11 +2431,8 @@ def test_semantic_cluster_dedup_survivors_and_witnesses(spark):
     n_all = reps.count()
     rep_ids = {r.vec_id for r in reps.select("vec_id").collect()}
     assert survivors <= rep_ids  # no clone ever survives
-    cents = _train_centroids(spark, reps, k=_adaptive_k(n_all))
-    cents_df = spark.createDataFrame(
-        cents, "cent_id int, c_emb array<double>"
-    )
-    rows = _assign_cells(reps, cents_df).collect()
+    cents = _train_centroids(reps, k=_adaptive_k(n_all))
+    rows = _assign_cells(reps, cents).collect()
     by_cell: dict[int, list] = {}
     cmap = dict(cents)
     for r in rows:
@@ -2489,30 +2486,58 @@ def test_semantic_cluster_exact_collapse_on_cloned_corpus(spark):
     assert all(orig[r.vec_id] == r.label for r in reps)
 
 
-def test_gemm_assign_matches_structmax_assign(spark):
-    """_assign_cells_gemm (the adaptive-k fast path) must produce the
-    identical (vec_id → cell) map as the crossJoin/struct-max form on
-    the same codebook — including the tie-break (highest cent_id on
-    equal sims = last-argmax).  Driven with a k = 20 trained codebook
-    (> _KM_K, the gate that enables the path in production) over the
-    sf0.001 embeddings; centroids are well separated so a last-ulp
-    summation-order difference cannot flip an argmax."""
+def test_assign_cells_matches_sequential_fold_reference(spark):
+    """_assign_cells' `cell` and `cell2` must equal an independent
+    driver-side ranking: each vector dotted with each centroid as a
+    sequential double sum (dot_f's fold order), ranked by (sim desc,
+    cent_id desc).  The codebook is a k = 20 trained one plus a copy
+    of one centroid under a new cent_id, so exact ties occur (asserted)
+    and the highest-cent_id tie-break is exercised for both cells; a
+    one-centroid codebook must give cell = cell2 = its only id."""
     from powertrainstreaming_spark.operators.similarity import (
         _assign_cells,
-        _assign_cells_gemm,
         _train_centroids,
     )
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = _train_centroids(spark, emb, k=20)
-    cents_df = spark.createDataFrame(cents, "cent_id int, c_emb array<double>")
-    slow = {
-        r.vec_id: r.cell for r in _assign_cells(emb, cents_df).collect()
+    vecs = {r.vec_id: r.embedding for r in emb.collect()}
+
+    def fold(e, c):
+        acc = 0.0
+        for x, y in zip(e, c):
+            acc += float(x) * float(y)
+        return acc
+
+    def reference(cents):  # per vector: [(sim, cent_id)], best first
+        return {
+            vid: sorted(((fold(e, c), cid) for cid, c in cents), reverse=True)
+            for vid, e in vecs.items()
+        }
+
+    trained = _train_centroids(emb, k=20)
+    ref = reference(trained)
+    # duplicate the most-chosen centroid so the most vectors tie on it
+    top = max(
+        (cid for cid, _ in trained),
+        key=lambda cid: sum(r[0][1] == cid for r in ref.values()),
+    )
+    dup_id = max(cid for cid, _ in trained) + 1
+    cents = trained + [(dup_id, dict(trained)[top])]
+    ref = reference(cents)
+    assert sum(r[0][0] == r[1][0] for r in ref.values()) > 0  # real ties
+
+    got = {
+        r.vec_id: (r.cell, r.cell2)
+        for r in _assign_cells(emb, cents).collect()
     }
-    fast = {
-        r.vec_id: r.cell for r in _assign_cells_gemm(emb, cents).collect()
+    assert got == {vid: (r[0][1], r[1][1]) for vid, r in ref.items()}
+
+    one = [(7, trained[0][1])]
+    got1 = {
+        r.vec_id: (r.cell, r.cell2)
+        for r in _assign_cells(emb, one).collect()
     }
-    assert slow == fast
+    assert got1 == {vid: (7, 7) for vid in vecs}
 
 
 def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
@@ -2522,7 +2547,7 @@ def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
        relation is a superset (same primary cell ⇒ shared probe cell)
        and one-shot drops are monotone in it.
     2. Primary parity: every vector's `cell` (and key order) equals
-       the base assignment's — _assign_cells_top2 vs _assign_cells.
+       the base op's and the shared _assign_cells' choice.
     3. τ-consistency across probe blocks: no two mp SURVIVORS sharing
        ANY probe cell are ≥ τ similar (the later-keyed one would have
        been dropped via their shared block)."""
@@ -2554,12 +2579,9 @@ def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
     assert all(base[r.vec_id] == r.cell for r in mp_rows)  # 2. parity
 
     reps = _sem_reps(load(spark, sf, "embeddings"))
-    cents = _train_centroids(spark, reps, k=_adaptive_k(reps.count()))
-    cents_df = spark.createDataFrame(
-        cents, "cent_id int, c_emb array<double>"
-    )
+    cents = _train_centroids(reps, k=_adaptive_k(reps.count()))
     prim = {
-        r.vec_id: r.cell for r in _assign_cells(reps, cents_df).collect()
+        r.vec_id: r.cell for r in _assign_cells(reps, cents).collect()
     }
     emb_by_id = {
         r.vec_id: np.array(r.embedding)
@@ -2576,6 +2598,23 @@ def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
             if probe_sets[u] & probe_sets[v]:
                 cos = round(float(np.dot(emb_by_id[u], emb_by_id[v])), 6)
                 assert cos < _EMB_TAU + eps, (u, v, cos)  # 3.
+
+
+def test_semantic_dedup_keeps_a_one_vector_corpus(spark, tmp_path):
+    """A one-vector corpus trains a one-centroid codebook (the trainer
+    initialises from the k smallest vec_ids), so there is no second
+    cell to probe: both semantic-dedup ops must return that vector."""
+    from powertrainstreaming_spark.operators.dedup import (
+        dedup_embedding_cluster,
+        dedup_embedding_cluster_mp,
+    )
+
+    one = load(spark, SF, "embeddings").orderBy("vec_id").limit(1)
+    vid = one.first().vec_id
+    one.write.parquet(str(tmp_path / "embeddings.parquet"))
+    for op in (dedup_embedding_cluster, dedup_embedding_cluster_mp):
+        rows = op(spark, str(tmp_path)).collect()
+        assert [r.vec_id for r in rows] == [vid], op.__name__
 
 
 @given(st.integers(min_value=1, max_value=10**12))

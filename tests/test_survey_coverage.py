@@ -264,3 +264,19 @@ def test_query_surface_is_contract_first_tier_ordered():
     window = list(defs)[:50]
     assert all(n in _CONTRACT_KEYS for n in window)
     assert all(defs[n].oracle is not None for n in window)
+
+
+def test_operators_doc_matches_generator():
+    """docs/OPERATORS.md is generated from the registry; the committed
+    file must equal the generator's output (regenerate with
+    `python docs/gen_operators.py > docs/OPERATORS.md`)."""
+    import importlib.util
+    from pathlib import Path
+
+    docs = Path(__file__).resolve().parent.parent / "docs"
+    spec = importlib.util.spec_from_file_location(
+        "gen_operators", docs / "gen_operators.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert (docs / "OPERATORS.md").read_text() == gen.render()
