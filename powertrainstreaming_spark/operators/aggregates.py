@@ -153,15 +153,14 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     this beats N separate filtered scans N:1 on input bandwidth.
     """
     events = load(spark, sf_dir, "events")
-    dec_val = F.col("value").cast("decimal(18,6)")
     is_purchase = F.col("event_type") == "purchase"
     is_error = F.col("event_type") == "error"
     return events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count(F.when(is_purchase, 1)).alias("n_purchases"),
         money_sum("value").alias("sum_value"),
-        F.sum(F.when(is_purchase, dec_val)).cast("double").alias("purchase_value"),
-        F.sum(F.when(is_error, dec_val)).cast("double").alias("error_value"),
+        money_sum(F.when(is_purchase, F.col("value"))).alias("purchase_value"),
+        money_sum(F.when(is_error, F.col("value"))).alias("error_value"),
     )
 
 
@@ -738,13 +737,10 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg, map-side combined, scale-safe.
     """
     li = load(spark, sf_dir, "lineitem")
-    wx = (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")
-    w = F.col("l_extendedprice").cast("decimal(18,6)")
+    wx = F.col("l_extendedprice") * F.col("l_discount")
     return li.groupBy("l_returnflag").agg(
-        (F.sum(wx).cast("double") / F.sum(w).cast("double")).alias(
-            "wavg_discount"
-        ),
-        F.sum(w).cast("double").alias("total_weight"),
+        (money_sum(wx) / money_sum("l_extendedprice")).alias("wavg_discount"),
+        money_sum("l_extendedprice").alias("total_weight"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 

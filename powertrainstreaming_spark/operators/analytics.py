@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from powertrainstreaming_spark.functions.exprs import money_sum
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
@@ -457,9 +458,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rfm = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_seen"),
         F.count(F.when(is_p, 1)).alias("n_purchases"),
-        F.sum(F.when(is_p, F.col("value").cast("decimal(18,6)")))
-        .cast("double")
-        .alias("monetary"),
+        money_sum(F.when(is_p, F.col("value"))).alias("monetary"),
     )
     def score(col):
         return F.ntile(5).over(

@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from powertrainstreaming_spark.functions.exprs import dot_f, o_dot, sim_round
+from powertrainstreaming_spark.functions.exprs import (
+    dot_f,
+    money_sum,
+    o_dot,
+    sim_round,
+)
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
@@ -280,9 +285,7 @@ def fn_try_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("value") == 0, None).otherwise(F.col("value")))
         .isNotNull()
         .alias("has_nonzero"),
-        F.round(
-            F.sum(k.cast("decimal(18,6)")).cast("double") / F.count(k), 6
-        ).alias("avg_k"),
+        F.round(money_sum(k) / F.count(k), 6).alias("avg_k"),
     )
 
 

@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from powertrainstreaming_spark.functions.exprs import dot_f, o_dot, sim_round
+from powertrainstreaming_spark.functions.exprs import (
+    dot_f,
+    money_avg,
+    o_dot,
+    sim_round,
+)
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
@@ -586,12 +591,7 @@ def _train_centroids(
         comp = (
             assigned.select("cell", F.posexplode("embedding").alias("pos", "v"))
             .groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("mean_v")
-            )
+            .agg(money_avg("v").alias("mean_v"))
             .collect()
         )
         by_cell: dict[int, list[float]] = {}
@@ -739,12 +739,7 @@ def _pq_train(
                 "sub_id", "code", F.posexplode("subvec").alias("pos", "v")
             )
             .groupBy("sub_id", "code", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("mean_v")
-            )
+            .agg(money_avg("v").alias("mean_v"))
             .collect()
         )
         dim_per = len(cents[0][2])

@@ -731,10 +731,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prof = ev.groupBy("event_type", "hod").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("seasonal_mean"),
+        money_avg("value").alias("seasonal_mean"),
     )
     return (
         ev.join(prof, ["event_type", "hod"])

@@ -25,6 +25,17 @@ _REQUIRED_SQL_CONFS = {
     "spark.sql.adaptive.enabled": "true",
 }
 
+# Entries in Spark's LRU cache of Janino-compiled generated classes
+# (static conf ``spark.sql.codegen.cache.maxEntries``, default 100).
+# One perfbench ``batch_mix`` pass (the eight bench.py headline queries
+# plus the corpus clean / minhash near-dup / IVF k-means pipeline)
+# generates 221-247 distinct classes, so at 100 entries every warm pass
+# evicted and recompiled 193-232 of them; with 1000 it recompiles 2-8.
+# A ``telemetry_stream`` pass generates 66 and fits either way.  The
+# generated code strings are stable across runs, so the misses were
+# pure eviction.
+_CODEGEN_CACHE_ENTRIES = 1000
+
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply required runtime confs to an externally-built session.
@@ -33,6 +44,11 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     verified rather than swallowed, because a silently-missing
     ``nanosAsLong`` surfaces later as a cryptic parquet read error far
     from the cause.
+
+    Static confs are fixed when the JVM's first session starts, so the
+    codegen cache size that ``get_spark`` sets is not applied here: an
+    externally-built session keeps Spark's default of 100 entries and
+    recompiles evicted classes on warm passes.  Results are unaffected.
     """
     errors: list[str] = []
     for key, value in _REQUIRED_SQL_CONFS.items():
@@ -60,6 +76,11 @@ def get_spark(
     local[$SPARK_GRAFT_CPUS] mirrors the driver environment; on a real
     cluster the same code runs unchanged — partitioning decisions are
     expressed in the plans, not here.
+
+    The codegen cache holds ``_CODEGEN_CACHE_ENTRIES`` classes, enough
+    for the engine's working set, so a warm pass over queries already
+    run compiles almost nothing.  The conf is static: it takes effect
+    only when this call starts the JVM's first session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     parts = str(shuffle_partitions or os.environ.get("PTS_SHUFFLE_PARTITIONS", 32))
@@ -77,6 +98,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Arrow for any pandas-UDF path (similarity / multimodal ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES)
+        )
     )
     for key, value in _REQUIRED_SQL_CONFS.items():
         builder = builder.config(key, value)
