@@ -37,10 +37,13 @@ def test_session_stream_equals_batch(spark):
     assert _hash_df(s) == _hash_df(b)
 
 
+import contextlib
 import json
+import os
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from powertrainstreaming_spark.operators.streaming import (
@@ -53,8 +56,15 @@ from powertrainstreaming_spark.operators.streaming import (
     tumbling_transform,
     watermark_late_transform,
 )
+from powertrainstreaming_spark.sources.loaders import (
+    events_ddl,
+    shim_events_ts,
+    table_path,
+)
 from powertrainstreaming_spark.streaming.harness import (
+    _backlog_partitions,
     _checkpoints_are_local,
+    _file_backlog_bytes,
     events_stream,
     run_available_now,
     run_bounded,
@@ -143,53 +153,193 @@ class _StateProgress(StreamingQueryListener):
         self.terminated.set()
 
 
-def _assert_tumbling_state_instances(spark, expected: int) -> None:
-    """Every state operator of every micro-batch of the tumbling replay
-    reports ``expected`` shuffle partitions AND that many state-store
-    instances, and the rows still equal the batch twin."""
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+_ADVISORY_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@contextlib.contextmanager
+def _advisory_size(spark, value: str):
+    """The AQE advisory partition size set to ``value`` for the block;
+    the session's own setting, or its absence, afterwards."""
+    caller = spark.conf.get(_ADVISORY_KEY, None)
+    spark.conf.set(_ADVISORY_KEY, value)
+    try:
+        yield
+    finally:
+        if caller is None:
+            spark.conf.unset(_ADVISORY_KEY)
+        else:
+            spark.conf.set(_ADVISORY_KEY, caller)
+
+
+def _state_instances(spark, run):
+    """Call ``run()``, which runs one stateful stream, and return what it
+    returned and the state-partition count of its state operators.
+    Every state operator of every micro-batch must report that count as
+    its shuffle partitions and, where it reports any (the session-window
+    operator reports 0), as its state-store instances."""
     listener = _StateProgress()
     spark.streams.addListener(listener)
     try:
-        s = stream_tumbling_agg(spark, SF)
+        out = run()
         assert listener.terminated.wait(60)
     finally:
         spark.streams.removeListener(listener)
     ops = [op for p in listener.progress for op in p.get("stateOperators", [])]
-    assert ops, "the tumbling replay reported no state operator"
-    for op in ops:
-        assert op["numShufflePartitions"] == expected, op
-        assert op["numStateStoreInstances"] == expected, op
-    assert _hash_df(s) == _hash_df(tumbling_batch(spark, SF))
+    assert ops, "the stream reported no state operator"
+    counts = {op["numShufflePartitions"] for op in ops}
+    assert len(counts) == 1, ops
+    n = counts.pop()
+    assert {op["numStateStoreInstances"] for op in ops} <= {0, n}, ops
+    return out, n
 
 
-def test_stateful_replay_runs_one_state_instance_per_task_slot(spark):
-    """run_bounded starts a stateful query with min(session shuffle
-    partitions, task slots) state partitions, and the session's own
+def _slots(spark) -> int:
+    return min(int(spark.conf.get(_SHUFFLE_KEY)), spark.sparkContext.defaultParallelism)
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _tumbling_instances(spark, sf_dir: str) -> int:
+    """State instances of the tumbling replay of ``sf_dir``, whose rows
+    must still equal the batch twin."""
+    s, n = _state_instances(spark, lambda: stream_tumbling_agg(spark, sf_dir))
+    assert _hash_df(s) == _hash_df(tumbling_batch(spark, sf_dir))
+    return n
+
+
+@pytest.mark.parametrize("case", sorted(_NWAY_CASES))
+def test_nway_split_over_state_partitions_is_batch_equivalent(spark, case):
+    """The 4-way replay of every stateful shape, with a one-byte
+    advisory size splitting its backlog over the task slots, equals the
+    single-batch reference (which runs one state partition).  The
+    default rule gives the test fixtures one partition, so this is the
+    stream-equals-batch check of state spread over several instances."""
+    transform, mode, copies, collapse = _NWAY_CASES[case]
+    want = _nway_reference(spark, case)
+    stage = stage_events_nway(SF, 4, copies=copies)
+    with _advisory_size(spark, "1b"):
+        out, n = _state_instances(
+            spark,
+            lambda: run_bounded(transform(staged_events_stream(spark, stage)), mode),
+        )
+    assert n == _slots(spark) >= 2
+    if collapse is not None:
+        out = collapse(out)
+    assert _hash_df(out) == want
+
+
+def test_small_backlog_replay_runs_one_state_instance(spark, sf_mid):
+    """A bounded replay sizes its state partitions to its file backlog:
+    the sf0.01 events (about 2 MB) fit one 64 MB advisory partition, so
+    the tumbling replay runs one state-store instance, and the session's
     shuffle-partition setting reads the same afterwards."""
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    expected = min(int(before), spark.sparkContext.defaultParallelism)
-    _assert_tumbling_state_instances(spark, expected)
-    assert spark.conf.get(key) == before
+    before = spark.conf.get(_SHUFFLE_KEY)
+    assert _dir_bytes(sf_mid) < 64 * 1024 * 1024
+    assert _tumbling_instances(spark, sf_mid) == 1
+    assert spark.conf.get(_SHUFFLE_KEY) == before
+
+
+def test_small_advisory_size_splits_the_backlog(spark):
+    """With the advisory size at a third of the backlog the replay runs
+    ceil(backlog / advisory) = 3 instances, capped at min(session
+    shuffle partitions, task slots); a one-byte advisory size runs that
+    cap.  The session's settings read the same afterwards."""
+    before = spark.conf.get(_SHUFFLE_KEY)
+    backlog = _dir_bytes(SF)
+    third = -(-backlog // 3)
+    for advisory, want in ((third, 3), (1, backlog)):
+        with _advisory_size(spark, f"{advisory}b"):
+            assert _tumbling_instances(spark, SF) == min(want, _slots(spark))
+        assert spark.conf.get(_SHUFFLE_KEY) == before
 
 
 def test_state_pin_on_a_session_without_shuffle_partitions(spark):
     """A session that never set the shuffle partitions (a vanilla
-    session) pins against Spark's default of 200, and the key is unset
-    again afterwards."""
-    key = "spark.sql.shuffle.partitions"
-    fixture = spark.conf.get(key)
-    spark.conf.unset(key)
+    session) caps the backlog rule at Spark's default of 200 and the
+    task slots, and the key is unset again afterwards."""
+    fixture = spark.conf.get(_SHUFFLE_KEY)
+    spark.conf.unset(_SHUFFLE_KEY)
     try:
-        assert spark.conf.get(key, None) is None
-        default = int(spark.conf.get(key))
+        assert spark.conf.get(_SHUFFLE_KEY, None) is None
+        default = int(spark.conf.get(_SHUFFLE_KEY))
         assert default == 200
-        _assert_tumbling_state_instances(
-            spark, min(default, spark.sparkContext.defaultParallelism)
-        )
-        assert spark.conf.get(key, None) is None
+        assert _tumbling_instances(spark, SF) == 1
+        with _advisory_size(spark, "1b"):
+            assert _tumbling_instances(spark, SF) == _slots(spark)
+        assert spark.conf.get(_SHUFFLE_KEY, None) is None
     finally:
-        spark.conf.set(key, fixture)
+        spark.conf.set(_SHUFFLE_KEY, fixture)
+
+
+def test_checkpointed_start_keeps_the_slot_rule(spark, tmp_path):
+    """A checkpoint that outlives the run keeps min(session shuffle
+    partitions, task slots) state partitions whatever the backlog: a
+    ``checkpointLocation`` the caller passes, and a session-wide
+    checkpoint root under a memory sink."""
+    rows = []
+
+    def collect(batch_df, batch_id: int) -> None:
+        rows.extend(batch_df.collect())
+
+    writer = (
+        tumbling_transform(events_stream(spark, SF))
+        .writeStream.outputMode("complete")
+        .foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    _, n = _state_instances(spark, lambda: run_available_now(spark, writer))
+    assert n == _slots(spark) > 1
+    assert rows
+
+    root = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(root, str(tmp_path / "root"))
+    try:
+        _, n = _state_instances(
+            spark,
+            lambda: run_bounded(tumbling_transform(events_stream(spark, SF))),
+        )
+    finally:
+        spark.conf.unset(root)
+    assert n == _slots(spark)
+
+
+def test_non_file_source_keeps_the_slot_rule(spark):
+    """A source whose backlog is not a set of files (the rate source)
+    leaves the count at min(session shuffle partitions, task slots)."""
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 30)
+        .load()
+    )
+    agg = rate.groupBy((F.col("value") % 3).alias("k")).count()
+    out, n = _state_instances(spark, lambda: run_bounded(agg, "complete"))
+    assert n == _slots(spark)
+    assert sorted(tuple(r) for r in out.collect()) == [(0, 10), (1, 10), (2, 10)]
+
+
+def test_empty_backlog_replay_starts_one_partition(spark, tmp_path):
+    """A replay of an empty directory (0 bytes of backlog) starts with
+    one state partition and returns an empty table with the transform's
+    schema; the session's shuffle partitions read the same afterwards."""
+    events = table_path(SF, "events")
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    sdf = spark.readStream.schema(events_ddl(events)).parquet(empty)
+    transformed = tumbling_transform(shim_events_ts(sdf, events))
+    before = spark.conf.get(_SHUFFLE_KEY)
+    assert _file_backlog_bytes(transformed) == 0
+    assert _backlog_partitions(transformed) == 1
+    out = run_bounded(transformed)
+    assert out.schema == transformed.schema
+    assert out.count() == 0
+    assert spark.conf.get(_SHUFFLE_KEY) == before
 
 
 _MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
