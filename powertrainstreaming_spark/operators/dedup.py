@@ -296,10 +296,12 @@ def _verify_cross(
     transient, and it is exactly 1/K per chunk because every shuffled
     byte downstream of ``cands`` is candidate-pair-proportional.  The
     chunk union is the whole output by construction (a pmod partition
-    of ``cands`` partitions the emitted pairs); scripts/
-    probe_minhash_verify.py asserts the union bit-equal to the
-    one-shot plan at the 10× tier before any big-tier run books a
-    number."""
+    of ``cands`` partitions the emitted pairs).  The union was asserted
+    bit-equal to the one-shot plan at the 10× tier before the 1000×
+    run booked a number (docs/SCALE.md, "dedup_near_minhash 1000×:
+    LANDED via chunked verify"; script removed, last at 2140ddd), and
+    tests/test_properties.py::test_minhash_chunked_verify_equals_one_shot
+    pins it at fixture scale."""
     ga = grp.select(
         F.col("rep").alias("doc_a"),
         F.col("codes").alias("codes_a"),
@@ -742,7 +744,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per distinct-set candidate pair that also passes the size
     prune, with everything downstream scalar-only.
 
-    [MEASURED, round 9 — scripts/probe_minhash_verify.py] The verify
+    [MEASURED, round 9 — docs/SCALE.md, "100× tier (flagships)",
+    round-9 readout; script removed, last at 2140ddd] The verify
     rework, receipted at 100×: candidates 116,316,335 → 46,660,506
     under the size-ratio prune (59.9% cut); wall 363.7 → 114.3 s; peak
     scratch 24 → 8.3 GB; output rows bit-identical (19,053,889).
@@ -759,7 +762,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     extrapolation to ~43 GB against the 79 GB quota — the tier the
     round-8/9 attempts died on; docs/SCALE.md carries the 1000× row.
 
-    [MEASURED, round 11 — probe_minhash_verify.py --chunked-1000] The
+    [MEASURED, round 11 — docs/SCALE.md, "dedup_near_minhash 1000×:
+    LANDED via chunked verify"; script removed, last at 2140ddd] The
     1000× tier LANDED under the chunked verify: the candidate stream
     (454,235,264 pairs, 9.73× the 100× count) materialized once as
     pmod-partitioned parquet, verified in K=8 sequential chunks with
@@ -767,7 +771,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     output (exactly copy-linear), peak scratch 20.2 GB vs the 79 GB
     quota that killed every one-shot attempt; µs/row 4.65 vs 4.40 at
     700× (flat through the top rung).  The chunk union is proven
-    bit-equal to this one-shot plan at 10× (--chunked-equiv).  At
+    bit-equal to this one-shot plan at 10×.  At
     cluster scale no chunking is needed (~60-70 MB/executor); K is the
     single-host knob trading ~10-15% wall for a 1/K transient bound.
     """
@@ -1413,75 +1417,6 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m1.join(
         clabels.withColumnRenamed("doc_id", "cnode"), m1.l1 == F.col("cnode")
     ).select("doc_id", "component_id")
-
-
-_MLLIB_SAMPLE_MOD = 4
-
-
-def _mllib_sample_pred():
-    """Deterministic 1/_MLLIB_SAMPLE_MOD document slice for the MLlib
-    interop comparison — shared by the operator and its recall
-    property test so both sides of the comparison see the same docs."""
-    return F.pmod(F.xxhash64("doc_id"), F.lit(_MLLIB_SAMPLE_MOD)) == 0
-
-
-@query("dedup_minhash_mllib", oracle=None, tier="P2")
-def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib-interop near-dup pairs: Tokenizer -> binary HashingTF ->
-    ml.feature.MinHashLSH approxSimilarityJoin at the same tau as the
-    hand-rolled pipeline — proving the engine composes with the Spark
-    ML feature stack (the route users with existing ml.Pipeline code
-    take), not only with the hand-built poly-hash operators.
-
-    Rows-only check by design: MinHashLSH's hash family is seeded JVM
-    murmur3 over 1024 hashed features, irreproducible in DuckDB — the
-    property-test layer pins it instead: candidates are generated by
-    banded LSH (never all-pairs), every returned pair's EXACT hashed-
-    feature Jaccard distance is <= the threshold (approxSimilarityJoin
-    verifies candidates exactly), and recall is measured against the
-    `dedup_near_exact` ground truth.  Same scale physics as the
-    hand-rolled MinHash: candidate volume is bounded by band-bucket
-    sizes, and the fit() is a metadata pass (MinHashLSH samples hash
-    coefficients; no data-dependent training job).
-
-    Runs on a deterministic 1/4 hash-sample of documents
-    (_MLLIB_SAMPLE_MOD): this operator is an INTEROP COMPARISON — its
-    signal is "the ml.Pipeline route produces verified pairs with high
-    recall against the exact ground truth on the same slice", and that
-    signal is slice-invariant (hash sampling preserves the dup-pair
-    distribution; both docs of a near-dup pair survive with p=1/16,
-    which at gate scale still leaves ~170 true pairs).  The slice cut
-    the sf0.1 sweep tail from 176 s to well under 60 s — the
-    production near-dup path is dedup_near_minhash, which runs
-    unsampled.  The recall property test samples the ground truth with
-    the IDENTICAL Spark-side predicate.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .filter(_mllib_sample_pred())
-        .select("doc_id", "text")
-    )
-    tokens = Tokenizer(inputCol="text", outputCol="tokens").transform(docs)
-    feats = HashingTF(
-        inputCol="tokens", outputCol="features", numFeatures=1024, binary=True
-    ).transform(tokens)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=5, seed=42
-    ).fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, 1.0 - _JAC_TAU, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(F.col("jaccard_dist"), 6).alias("jaccard_dist"),
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
 
 
 _FUZZY_HEAD = 20

@@ -28,11 +28,12 @@ from pyspark.sql import functions as F
 from powertrainstreaming_spark.scratch import scratch_dir
 from powertrainstreaming_spark.functions.exprs import money_sum, o_money_sum
 from powertrainstreaming_spark.plans.registry import query
-from powertrainstreaming_spark.sources.loaders import load, table_path
+from powertrainstreaming_spark.sources.loaders import TABLE_DDL, load, table_path
 from powertrainstreaming_spark.streaming.harness import (
     events_stream,
     run_available_now,
     run_bounded,
+    stage_events_nway,
     staged_events_stream,
 )
 
@@ -269,8 +270,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the watermark passes (bounded state; plain dropDuplicates
     grows state forever — never use it on a 100 TB stream).
     """
-    stage = _stage_events_twice(sf_dir)
-    sdf = _staged_stream(spark, stage)
+    sdf = staged_events_stream(spark, stage_events_nway(sf_dir, 1, copies=2))
     return run_bounded(dedup_transform(sdf), "append")
 
 
@@ -336,8 +336,7 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     by stream_tumbling_agg, append by stream_watermark_late; update is
     the remaining mode.
     """
-    stage = _stage_events_split(sf_dir)
-    s = _staged_stream(spark, stage)
+    s = staged_events_stream(spark, stage_events_nway(sf_dir, 2))
     agg = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         money_sum("value").alias("sum_value"),
@@ -350,38 +349,6 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_events").alias("n_events"),
         F.max_by("sum_value", "n_events").alias("sum_value"),
     )
-
-
-def _stage_events_twice(sf_dir: str) -> str:
-    """Stage two identical copies of the events file in a scratch dir
-    (duplicate injection for multi-batch dedup tests)."""
-    import shutil
-    stage = scratch_dir(prefix="pts_stage2_")
-    src = table_path(sf_dir, "events")
-    shutil.copy(src, os.path.join(stage, "events_a.parquet"))
-    shutil.copy(src, os.path.join(stage, "events_b.parquet"))
-    return stage
-
-
-def _stage_events_split(sf_dir: str) -> str:
-    """Stage the events file as two disjoint halves (no duplication) so
-    a maxFilesPerTrigger=1 replay produces two micro-batches over the
-    SAME total data — windows spanning the split are updated twice."""
-    import pyarrow.parquet as pq
-
-    stage = scratch_dir(prefix="pts_split_")
-    table = pq.read_table(table_path(sf_dir, "events"))
-    half = table.num_rows // 2
-    pq.write_table(table.slice(0, half), os.path.join(stage, "events_a.parquet"))
-    pq.write_table(table.slice(half), os.path.join(stage, "events_b.parquet"))
-    return stage
-
-
-def _staged_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
-    """One-file-per-micro-batch stream over a staged scratch dir (the
-    staged copies inherit whatever ts encoding the fixture generation
-    shipped, so the shim inside must probe, not assume)."""
-    return staged_events_stream(spark, stage_dir)
 
 
 @query(
@@ -421,8 +388,7 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is deterministic under any batch split (a float running SUM
     would not be).
     """
-    stage = _stage_events_split(sf_dir)
-    s = _staged_stream(spark, stage)
+    s = staged_events_stream(spark, stage_events_nway(sf_dir, 2))
     sink = run_bounded(stateful_running_transform(s), "update")
     return collapse_running_sink(sink)
 
@@ -682,10 +648,11 @@ def join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_bounded(joined, "append")
 
 
-def _stage_documents_halves(sf_dir: str) -> str:
-    """Two doc_id-ordered row-halves of the documents fixture with
-    strictly increasing mtimes — a 2-micro-batch corpus-ingest replay
-    (the file source orders by modification time, forced here)."""
+def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents fixture as a 2-micro-batch corpus-ingest stream:
+    two doc_id-ordered row-halves staged with strictly increasing mtimes
+    (the file source orders by modification time, forced here), read
+    one file per micro-batch."""
     import pyarrow.parquet as pq
 
     stage = scratch_dir(prefix="pts_docstream_")
@@ -696,7 +663,11 @@ def _stage_documents_halves(sf_dir: str) -> str:
         path = os.path.join(stage, f"part-{k:04d}.parquet")
         pq.write_table(t.slice(lo, hi - lo), path)
         os.utime(path, (base + 10 * k, base + 10 * k))
-    return stage
+    return (
+        spark.readStream.schema(TABLE_DDL["documents"])
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+    )
 
 
 from powertrainstreaming_spark.operators.dedup import _SEG_TOKENS
@@ -744,14 +715,7 @@ def stream_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bounded, prefer dropDuplicatesWithinWatermark as stream_dedup
     does.  Batch-split invariance (N = 1 vs 4) is property-tested.
     """
-    from powertrainstreaming_spark.sources.loaders import TABLE_DDL
-
-    stage = _stage_documents_halves(sf_dir)
-    sdf = (
-        spark.readStream.schema(TABLE_DDL["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    sdf = _documents_stream(spark, sf_dir)
     segs = sdf.select(
         F.explode(
             F.expr(
@@ -821,14 +785,8 @@ def stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         poly_hash,
     )
     from powertrainstreaming_spark.operators.aggregates import _CMS_D, _CMS_W
-    from powertrainstreaming_spark.sources.loaders import TABLE_DDL
 
-    stage = _stage_documents_halves(sf_dir)
-    sdf = (
-        spark.readStream.schema(TABLE_DDL["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    sdf = _documents_stream(spark, sf_dir)
     rows = F.array([F.lit(i) for i in range(_CMS_D)])
     cells = (
         sdf.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
@@ -889,8 +847,7 @@ def stream_scd2_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState-over-transformWithStateInPandas API
     rationale as stream_stateful_running (google.protobuf absent).
     """
-    stage = _stage_events_split(sf_dir)
-    s = _staged_stream(spark, stage)
+    s = staged_events_stream(spark, stage_events_nway(sf_dir, 2))
     return run_bounded(scd2_changes_transform(s), "append")
 
 
@@ -955,9 +912,11 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch cadence; the stream path is STATELESS — score, one broadcast
     lookup, filter — so it has zero streaming state, no watermark, and
     per-batch latency independent of history.  MEASURED, not just
-    argued (round 10, scripts/probe_stream_state.py gate →
-    docs/SCALE.md): the probe asserts every progress event reports an
-    EMPTY stateOperators list at the 1× and 10× replay tiers
+    argued: every progress event reports an EMPTY stateOperators list
+    (round 10 at the 1× and 10× replay tiers, docs/SCALE.md "10× scale
+    probe"; script removed, last at 2140ddd; pinned at fixture scale
+    by tests/test_stream_equivalence.py::
+    test_stream_quality_gate_equals_batch_threshold_gate)
     (contrast the three
     stateful twins: segment-dedup's content-proportional index, CMS's
     fixed 2048 cells, SCD2's per-entity row — this op completes the
@@ -975,15 +934,9 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _gate_scored,
         _gate_thresholds,
     )
-    from powertrainstreaming_spark.sources.loaders import TABLE_DDL
 
     thr = _gate_thresholds(_gate_scored(load(spark, sf_dir, "documents")))
-    stage = _stage_documents_halves(sf_dir)
-    sdf = (
-        spark.readStream.schema(TABLE_DDL["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    sdf = _documents_stream(spark, sf_dir)
     gated = (
         _gate_scored(sdf)
         .join(F.broadcast(thr), "lang")
@@ -1020,7 +973,7 @@ def stream_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is structural — _span_clean is a pure per-document function given
     the fixed index — so this op carries the batch op's FULL SQL
     oracle verbatim, and the 2-batch replay (the
-    _stage_documents_halves harness) hash-checks it end to end.  At
+    _documents_stream harness) hash-checks it end to end.  At
     100 TB the per-batch join against the stored index is the same
     fingerprint equi-join the batch op runs, sized by the BATCH (not
     the corpus) on the probe side.
@@ -1032,25 +985,20 @@ def stream_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (O(batches × corpus), the round-10 verdict's weak
     mark #1; the repo-wide localCheckpoint rule).  With the
     checkpoint, per-batch work reads the saved index blocks instead
-    (probe receipt: scripts/probe_stream_state.py run_span_index —
-    the shingle-scan stages execute once, not once per batch).
+    (docs/SCALE.md, "stream_span_dedup: span index materialized once";
+    script removed, last at 2140ddd — the shingle-scan stages execute
+    once, not once per batch).
     """
     from powertrainstreaming_spark.operators.dedup import (
         _span_clean,
         _span_removal_index,
     )
-    from powertrainstreaming_spark.sources.loaders import TABLE_DDL
 
     index = _span_removal_index(
         load(spark, sf_dir, "documents")
     ).localCheckpoint(eager=True)
     out = scratch_dir(prefix="pts_span_stream_")
-    stage = _stage_documents_halves(sf_dir)
-    sdf = (
-        spark.readStream.schema(TABLE_DDL["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    sdf = _documents_stream(spark, sf_dir)
 
     def _clean_batch(batch_df: DataFrame, batch_id: int) -> None:
         _span_clean(batch_df.select("doc_id", "text"), index).write.mode(

@@ -69,7 +69,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 
 def get_spark(
     app_name: str = "powertrainstreaming-spark",
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or reuse) the session used by tests and bench.
 
@@ -83,11 +83,10 @@ def get_spark(
     only when this call starts the JVM's first session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    parts = str(shuffle_partitions or os.environ.get("PTS_SHUFFLE_PARTITIONS", 32))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", parts)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Single-JVM local mode: driver heap IS the executor heap.  8g
         # suits tests/bench; heavy harnesses (the 10x scale probe's
         # adversarial dedup runs) raise it via SPARK_GRAFT_DRIVER_MEM.

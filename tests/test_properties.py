@@ -104,10 +104,11 @@ def test_minhash_chunked_verify_equals_one_shot(spark):
     """The chunked-verify scale path (round 11 — the 1000× landing's
     execution strategy: candidates partitioned by pmod hash, verified
     per chunk, within-pairs computed once) must reproduce the
-    registered one-shot plan's output EXACTLY.  The probe asserts this
-    at 10× (scripts/probe_minhash_verify.py --chunked-equiv); this
-    pins the `_minhash_rep_candidates` / `_verify_cross` /
-    `_within_pairs` composition at fixture scale so a refactor cannot
+    registered one-shot plan's output EXACTLY.  Round 11 asserted this
+    at 10× (docs/SCALE.md, "dedup_near_minhash 1000×: LANDED via
+    chunked verify"; script removed, last at 2140ddd); this pins the
+    `_minhash_rep_candidates` / `_verify_cross` / `_within_pairs`
+    composition at fixture scale so a refactor cannot
     silently diverge the two paths."""
     from pyspark.sql import functions as F
 
@@ -696,47 +697,6 @@ def test_interp_agrees_with_locf_on_observed_buckets(spark):
         assert ri["is_gap"] == rl["is_gap"]
         if not ri["is_gap"]:
             assert ri["interp_value"] == rl["filled_value"]
-
-
-def test_mllib_minhash_pairs_verified_and_high_recall(spark):
-    """MLlib MinHashLSH pairs: every pair's exact hashed-feature
-    Jaccard distance respects the threshold, pairs are canonical
-    (a < b, unique), and recall vs the exact-Jaccard ground truth —
-    restricted to the operator's deterministic document slice — is
-    high (banded LSH may miss a boundary pair; feature-hash collisions
-    may shift a distance, so the bound is <1 but tight)."""
-    from powertrainstreaming_spark.operators.dedup import (
-        _JAC_TAU,
-        _mllib_sample_pred,
-        dedup_minhash_mllib,
-        dedup_near_exact,
-    )
-
-    ml_pairs = dedup_minhash_mllib(spark, SF).collect()
-    assert ml_pairs
-    seen = set()
-    for r in ml_pairs:
-        assert r["doc_a"] < r["doc_b"]
-        assert r["jaccard_dist"] <= (1.0 - _JAC_TAU) + 1e-9
-        assert (r["doc_a"], r["doc_b"]) not in seen
-        seen.add((r["doc_a"], r["doc_b"]))
-    sampled = {
-        r["doc_id"]
-        for r in load(spark, SF, "documents")
-        .filter(_mllib_sample_pred())
-        .select("doc_id")
-        .collect()
-    }
-    # every returned pair must come from the operator's own slice
-    assert all(a in sampled and b in sampled for a, b in seen)
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_near_exact(spark, SF).collect()
-        if r["doc_a"] in sampled and r["doc_b"] in sampled
-    }
-    assert exact
-    recall = len(exact & seen) / len(exact)
-    assert recall >= 0.9, f"recall {recall:.3f} over {len(exact)} true pairs"
 
 
 def test_approx_distinct_within_relative_error_of_exact(spark):

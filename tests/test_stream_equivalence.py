@@ -41,6 +41,7 @@ import contextlib
 import json
 import os
 import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -137,20 +138,26 @@ def test_nway_split_is_batch_equivalent(spark, case, n_files):
 
 class _StateProgress(StreamingQueryListener):
     """Progress events of a query and its termination (listener events
-    arrive asynchronously, after ``run_bounded`` returns)."""
+    arrive asynchronously, after ``run_bounded`` returns).  Only runs
+    started after the listener was added count, so a late event of an
+    earlier query is ignored (start events are delivered synchronously)."""
 
     def __init__(self):
         self.progress: list[dict] = []
         self.terminated = threading.Event()
+        self._runs: set[str] = set()
 
     def onQueryStarted(self, event):
-        pass
+        self._runs.add(str(event.runId))
 
     def onQueryProgress(self, event):
-        self.progress.append(json.loads(event.progress.json))
+        progress = json.loads(event.progress.json)
+        if progress["runId"] in self._runs:
+            self.progress.append(progress)
 
     def onQueryTerminated(self, event):
-        self.terminated.set()
+        if str(event.runId) in self._runs:
+            self.terminated.set()
 
 
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -172,12 +179,9 @@ def _advisory_size(spark, value: str):
             spark.conf.set(_ADVISORY_KEY, caller)
 
 
-def _state_instances(spark, run):
-    """Call ``run()``, which runs one stateful stream, and return what it
-    returned and the state-partition count of its state operators.
-    Every state operator of every micro-batch must report that count as
-    its shuffle partitions and, where it reports any (the session-window
-    operator reports 0), as its state-store instances."""
+def _run_with_progress(spark, run):
+    """Call ``run()``, which runs one stream, and return what it returned
+    and the stream's progress events."""
     listener = _StateProgress()
     spark.streams.addListener(listener)
     try:
@@ -185,7 +189,17 @@ def _state_instances(spark, run):
         assert listener.terminated.wait(60)
     finally:
         spark.streams.removeListener(listener)
-    ops = [op for p in listener.progress for op in p.get("stateOperators", [])]
+    return out, listener.progress
+
+
+def _state_instances(spark, run):
+    """Call ``run()``, which runs one stateful stream, and return what it
+    returned and the state-partition count of its state operators.
+    Every state operator of every micro-batch must report that count as
+    its shuffle partitions and, where it reports any (the session-window
+    operator reports 0), as its state-store instances."""
+    out, progress = _run_with_progress(spark, run)
+    ops = [op for p in progress for op in p.get("stateOperators", [])]
     assert ops, "the stream reported no state operator"
     counts = {op["numShufflePartitions"] for op in ops}
     assert len(counts) == 1, ops
@@ -649,11 +663,16 @@ def test_scd2_state_survives_checkpoint_restart(spark, tmp_path):
 def test_stream_quality_gate_equals_batch_threshold_gate(spark):
     """The stateless streaming gate must emit exactly the batch
     threshold gate's rows (same thresholds, same map-side filter —
-    value-for-value, not just count)."""
+    value-for-value, not just count), over a replay of at least two
+    micro-batches none of which reports a state operator."""
     from powertrainstreaming_spark.plans.registry import all_defs
 
     defs = all_defs()
-    streamed = defs["stream_quality_gate"].fn(spark, SF)
+    streamed, progress = _run_with_progress(
+        spark, lambda: defs["stream_quality_gate"].fn(spark, SF)
+    )
+    assert len({p["batchId"] for p in progress}) >= 2, progress
+    assert all(p["stateOperators"] == [] for p in progress), progress
     batch = defs["corpus_quality_gate_threshold"].fn(spark, SF)
     s = {tuple(r) for r in streamed.collect()}
     b = {tuple(r) for r in batch.collect()}
@@ -675,3 +694,22 @@ def test_stream_span_dedup_equals_batch_span_dedup(spark):
     b = {tuple(r) for r in batch.collect()}
     assert s == b
     assert streamed.count() == len(s)  # no duplicate emissions
+
+
+def test_streams_start_only_in_the_harness():
+    """Every stream in the package and its scripts starts through
+    ``streaming/harness.py``, which pins the state partitions and the
+    checkpoint manager: no other module triggers or awaits a query."""
+    root = Path(__file__).resolve().parent.parent
+    harness = root / "powertrainstreaming_spark" / "streaming" / "harness.py"
+    offenders = [
+        str(path.relative_to(root))
+        for top in ("powertrainstreaming_spark", "scripts")
+        for path in sorted((root / top).rglob("*.py"))
+        if path != harness
+        and any(
+            call in path.read_text(encoding="utf-8")
+            for call in ("awaitTermination(", ".trigger(")
+        )
+    ]
+    assert offenders == []

@@ -95,7 +95,6 @@ def test_extras_are_intentional():
         "fn_collation_ci",
         "set_union_by_name",
         "multimodal_contrastive_pairs",
-        "dedup_minhash_mllib",
         "dedup_fuzzy_levenshtein",
         "text_unigram_logprob",
         # round 4
