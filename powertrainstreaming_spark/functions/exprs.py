@@ -38,7 +38,7 @@ Rules implemented:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -57,6 +57,13 @@ def money_avg(col: Column | str) -> Column:
     """Deterministic average: exact decimal sum ÷ bigint count, in double."""
     col = F.col(col) if isinstance(col, str) else col
     return F.sum(col.cast(_MONEY)).cast("double") / F.count(F.lit(1))
+
+
+def money_frame_sum(col: Column | str, w: WindowSpec) -> Column:
+    """Exact decimal window-frame sum of a money/quantity expression, in
+    double: independent of how either engine associates the additions."""
+    col = F.col(col) if isinstance(col, str) else col
+    return F.sum(col.cast(_MONEY)).over(w).cast("double")
 
 
 def sim_round(col: Column, places: int = 6) -> Column:

@@ -1566,19 +1566,19 @@ def corpus_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape, composing the house near-dup discipline end-to-end:
     (1) exact-duplicate COLLAPSE first (CLAUDE.md rule — m verbatim
-    clones would otherwise amplify every LSH bucket m²-fold): distinct
-    token sets become one representative each, multiplicity hard-capped
-    with the same loud assert as _tau_pairs, and the group table is
+    clones would otherwise amplify every LSH bucket m²-fold): the
+    family's one ``_collapse_sets``, with train and eval member lists
+    split by role, so distinct token sets become one representative
+    each, multiplicity hard-capped, and the group table is
     localCheckpointed once for its four consumers; (2) banded MinHash
     (k=32, 4×8 — the shared _MINHASH_SIG_CTES family) computed ONCE
-    PER DISTINCT SET from the stored code arrays (h = code div 2³¹
-    recovers the primary hash bit-exactly — no re-tokenization pass);
-    (3) candidates = band-signature equi-join under the FIRST-MATCH-
-    BAND discipline (round 11, back-ported from dedup_near_minhash:
-    earlier bands' signatures ride as b−1 scalar columns, a joined row
-    survives only if no earlier band also matches — exactly-once
-    emission, no pair-stream .distinct() exchange) with THREE lossless
-    prunes in the join condition: the EXACT-INT size-ratio bound
+    PER DISTINCT SET from the stored code arrays (``_rep_hashes``: h =
+    code div 2³¹ recovers the primary hash bit-exactly — no
+    re-tokenization pass); (3) candidates = the family's one
+    ``_first_match_band_join`` (a pair is emitted only from its lowest
+    matching band — exactly-once, no pair-stream .distinct() exchange)
+    with THREE lossless prunes as its extra join condition: the
+    EXACT-INT size-ratio bound
     (9·max ≤ 10·min, the _JAC_TAU_NUM discipline), and bears-train/
     bears-eval flags so only pairs that can expand to a (train, eval)
     output leg ship to the verify — never an all-pairs product; (4)
@@ -1600,109 +1600,51 @@ def corpus_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥0.99 at τ=0.9 re-bands to 16×2 (the b/r knob, not a new design).
     """
     from powertrainstreaming_spark.operators.dedup import (
-        _JAC_COLLAPSE_MAX_MULT,
         _MINHASH_B,
         _band_sigs_wide_from_h,
+        _collapse_sets,
         _doc_tokens,
+        _first_match_band_join,
+        _rep_hashes,
+        _role_members,
+        _size_ratio_prune,
     )
 
-    toks = _doc_tokens(spark, sf_dir)
-    code = (
-        poly_hash("token") * F.lit(2_147_483_648)
-        + poly_hash("token", POLY_B2, POLY_M2)
-    ).alias("code")
-    sets_ = (
-        toks.select("doc_id", code)
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("code")).alias("codes"))
+    is_eval = F.col("doc_id") % _EVAL_MOD == 0
+    grp = _collapse_sets(
+        _doc_tokens(spark, sf_dir),
+        "fuzzy-decontam",
+        _role_members(~is_eval, "train_members"),
+        _role_members(is_eval, "eval_members"),
     )
-    grp = (
-        sets_.groupBy("codes")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("doc_id") % _EVAL_MOD != 0, F.col("doc_id"))
-                )
-            ).alias("train_members"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("doc_id") % _EVAL_MOD == 0, F.col("doc_id"))
-                )
-            ).alias("eval_members"),
-            F.count(F.lit(1)).alias("m"),
-        )
-        .filter(
-            F.assert_true(
-                F.col("m") <= F.lit(_JAC_COLLAPSE_MAX_MULT),
-                F.concat(
-                    F.lit(
-                        "fuzzy-decontam duplicate-collapse cap exceeded: "
-                        "one token set has multiplicity "
-                    ),
-                    F.col("m").cast("string"),
-                    F.lit(f" > {_JAC_COLLAPSE_MAX_MULT}"),
-                ),
-            ).isNull()
-        )
-        .localCheckpoint()
-    )
-    # Band each DISTINCT set once from its code array — WIDE form
-    # (round 11: the dedup_near_minhash first-match-band discipline
-    # back-ported here, deleting this op's pair-stream .distinct()
-    # exchange — the same ~1.5× duplicate stream the round-10 minhash
-    # receipt measured).  Each side also carries three lossless
-    # candidate prunes as scalar columns:
+    # Band each DISTINCT set once from its code array, then the
+    # family's one first-match band join (exactly-once candidate
+    # emission, no pair-stream .distinct() exchange).  Each side also
+    # carries three lossless candidate prunes as scalar columns:
     #   n  — set size, for the EXACT-INT size-ratio prune (J ≥ 0.9
     #        forces 9·max ≤ 10·min; verified output unchanged);
     #   ht/he — bears-train / bears-eval flags: a pair expands to
     #        output only via train(A)×eval(B) or train(B)×eval(A), so
-    #        (ht_a ∧ he_b) ∨ (ht_b ∧ he_a) keeps exactly the pairs
+    #        (hta ∧ heb) ∨ (htb ∧ hea) keeps exactly the pairs
     #        that can emit rows (train-only×train-only LSH collisions
     #        previously rode all the way through the array verify).
-    rep_h = grp.select(
-        F.col("rep").alias("doc_id"), F.explode("codes").alias("c")
-    ).select("doc_id", F.expr("c div 2147483648").alias("h"))
     meta = grp.select(
         F.col("rep").alias("doc_id"),
         F.size("codes").alias("n"),
         (F.size("train_members") >= 1).alias("ht"),
         (F.size("eval_members") >= 1).alias("he"),
     )
-    sigs = _band_sigs_wide_from_h(rep_h).join(meta, "doc_id")
-    sa = sigs.select(
-        F.col("doc_id").alias("rep_a"),
-        "band",
-        "sig",
-        F.col("n").alias("na"),
-        F.col("ht").alias("ht_a"),
-        F.col("he").alias("he_a"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(_MINHASH_B - 1)],
+    sigs = _band_sigs_wide_from_h(_rep_hashes(grp)).join(meta, "doc_id")
+    cand = _first_match_band_join(
+        sigs,
+        sigs,
+        ("rep_a", "rep_b"),
+        _MINHASH_B,
+        (F.col("rep_a") < F.col("rep_b"))
+        & _size_ratio_prune(_FUZZY_TAU_NUM, _FUZZY_TAU_DEN)
+        & ((F.col("hta") & F.col("heb")) | (F.col("htb") & F.col("hea"))),
+        carry=("n", "ht", "he"),
     )
-    sb = sigs.select(
-        F.col("doc_id").alias("rep_b"),
-        F.col("band").alias("band_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("n").alias("nb"),
-        F.col("ht").alias("ht_b"),
-        F.col("he").alias("he_b"),
-        *[F.col(f"s{j}").alias(f"sb{j}") for j in range(_MINHASH_B - 1)],
-    )
-    first_match = F.lit(True)
-    for j in range(_MINHASH_B - 1):
-        first_match = first_match & (
-            (F.col("band") <= j) | (F.col(f"sa{j}") != F.col(f"sb{j}"))
-        )
-    cand = sa.join(
-        sb,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("sig") == F.col("sig_b"))
-        & (F.col("rep_a") < F.col("rep_b"))
-        & (F.col("na") * _FUZZY_TAU_DEN >= F.col("nb") * _FUZZY_TAU_NUM)
-        & (F.col("nb") * _FUZZY_TAU_DEN >= F.col("na") * _FUZZY_TAU_NUM)
-        & ((F.col("ht_a") & F.col("he_b")) | (F.col("ht_b") & F.col("he_a")))
-        & first_match,
-    ).select("rep_a", "rep_b")
     ga = grp.select(
         F.col("rep").alias("rep_a"),
         F.col("codes").alias("codes_a"),

@@ -15,7 +15,7 @@ min_by), not whatever row dropDuplicates happens to keep.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from powertrainstreaming_spark.functions.exprs import (
@@ -101,6 +101,27 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CODE_BASE = 2_147_483_648  # 2³¹: both poly-hash halves are < 2³¹
+
+
+def _token_code(col: str = "token") -> Column:
+    """The packed int64 token code h1·2³¹ + h2 (two independent
+    polynomial hashes) that every near-dup set operator intersects in
+    place of token strings — collision and size analysis in
+    ``_pair_jaccard``."""
+    return poly_hash(col) * F.lit(_CODE_BASE) + poly_hash(col, POLY_B2, POLY_M2)
+
+
+def _rep_hashes(grp: DataFrame) -> DataFrame:
+    """(doc_id = rep, h) per token of each collapsed set: the inverse of
+    ``_token_code``'s packing, h = code div 2³¹, recovers the primary
+    poly-hash bit-exactly, so banding a collapsed set needs no
+    re-tokenization."""
+    return grp.select(
+        F.col("rep").alias("doc_id"), F.explode("codes").alias("c")
+    ).select("doc_id", F.expr(f"c div {_CODE_BASE}").alias("h"))
+
+
 def _pair_jaccard(toks: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact token-set Jaccard for the given (doc_a, doc_b) pairs.
 
@@ -131,11 +152,7 @@ def _pair_jaccard(toks: DataFrame, pairs: DataFrame) -> DataFrame:
     raw tokens and the hash gate itself continuously re-validates the
     no-collision assumption at two scales.
     """
-    code = (
-        poly_hash("token") * F.lit(2_147_483_648)
-        + poly_hash("token", POLY_B2, POLY_M2)
-    ).alias("code")
-    coded = toks.select("doc_id", code)
+    coded = toks.select("doc_id", _token_code().alias("code"))
     sets_a = coded.groupBy("doc_id").agg(
         F.collect_list("code").alias("toks_a"),
         F.count(F.lit(1)).alias("na"),
@@ -212,22 +229,40 @@ _JAC_TAU_NUM, _JAC_TAU_DEN = 19, 20
 assert _JAC_TAU_NUM / _JAC_TAU_DEN == _JAC_TAU
 
 
-def _collapse_sets(toks: DataFrame, label: str) -> DataFrame:
+def _size_ratio_prune(num: int = _JAC_TAU_NUM, den: int = _JAC_TAU_DEN) -> Column:
+    """Size-ratio prune over carried set sizes na / nb, EXACT-INT (the
+    _JAC_TAU_NUM note): J ≥ num/den forces num·max ≤ den·min, so the
+    verified output is unchanged and the array-shipping verify gets
+    strictly fewer candidate pairs."""
+    return (F.col("na") * den >= F.col("nb") * num) & (
+        F.col("nb") * den >= F.col("na") * num
+    )
+
+
+def _role_members(pred: Column, name: str) -> Column:
+    """Member aggregate for ``_collapse_sets`` keeping only the doc ids
+    that satisfy ``pred`` (one role of a role-split op), sorted."""
+    return F.sort_array(
+        F.collect_list(F.when(pred, F.col("doc_id")))
+    ).alias(name)
+
+
+def _collapse_sets(toks: DataFrame, label: str, *members: Column) -> DataFrame:
     """EXACT-DUPLICATE COLLAPSE (the CLAUDE.md house rule): group
     documents by their exact token-code SET (sorted packed-int64
     array) so everything downstream — banding, candidate joins,
     verification — runs once per DISTINCT set, and member pairs expand
-    at the end.  Returns (codes, rep, members, m), localCheckpointed
+    at the end.  Returns (codes, rep, <members>, m), localCheckpointed
     because every consumer reads it 3+ times (the PageRank pattern).
-    Shared by _tau_pairs and dedup_near_minhash; the multiplicity cap
-    fails loudly rather than building an unbounded members array.
+    ``members`` are the member-list aggregates, by default
+    ``collect_list(doc_id) AS members``; the role-split ops
+    (corpus_decontam_minhash, sim_containment_join) pass one
+    ``_role_members`` list per role instead.  The one collapse of every
+    token-set near-dup op; the multiplicity cap fails loudly rather
+    than building an unbounded members array.
     """
-    code = (
-        poly_hash("token") * F.lit(2_147_483_648)
-        + poly_hash("token", POLY_B2, POLY_M2)
-    ).alias("code")
     sets_ = (
-        toks.select("doc_id", code)
+        toks.select("doc_id", _token_code().alias("code"))
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("code")).alias("codes"))
     )
@@ -235,7 +270,7 @@ def _collapse_sets(toks: DataFrame, label: str) -> DataFrame:
         sets_.groupBy("codes")
         .agg(
             F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("members"),
+            *(members or [F.collect_list("doc_id").alias("members")]),
             F.count(F.lit(1)).alias("m"),
         )
         .filter(
@@ -499,20 +534,14 @@ def _band_sigs_wide_from_h(th: DataFrame, with_n: bool = False) -> DataFrame:
     """(doc_id, band, sig, s0..s{B-2}[, n]) — banded MinHash
     signatures (k=32 seeded min-hashes via the exact-int64 seed
     family h_i(t) = ((2i+1)·H(t) + i) mod p, folded into b=4 bands of
-    r=8) from already-hashed tokens (doc_id, h), with every EARLIER
-    band's signature carried as scalar columns: the input shape of
-    the first-match-band join discipline (round 10).  Emitting a
-    candidate pair only from its LOWEST matching band makes the band
-    join's output exactly-once per candidate, deleting both the
-    ~1.5-2.6× duplicate pair stream (at j ≈ τ a true pair matches
-    most of the b bands) and the pair-stream ``.distinct()`` shuffle
-    that deduplicated it.  Width cost: (b−1) extra int64s on the
+    r=8) from already-hashed tokens (doc_id, h), laid out by
+    ``_band_explode`` for ``_first_match_band_join``.  Width cost of
+    carrying the earlier bands: (b−1) extra int64s on the
     distinct-set-proportional sig rows — noise next to the
-    pair-proportional stream it deletes.  Since round 11 every banded
-    operator consumes this wide form (dedup_near_minhash and
-    corpus_decontam_minhash from collapsed code arrays — h = code div
-    2³¹ recovers the primary poly-hash exactly, codes pack h1·2³¹ +
-    h2 with both halves < 2³¹, bit-identical to hashing raw tokens;
+    pair-proportional duplicate stream the first-match join deletes.
+    Every MinHash operator bands through here (dedup_near_minhash and
+    corpus_decontam_minhash from collapsed code arrays via
+    ``_rep_hashes``, bit-identical to hashing raw tokens;
     dedup_incremental_minhash from the raw per-doc token stream), so
     ``_MINHASH_SIG_CTES`` remains the single shared oracle.
 
@@ -549,32 +578,95 @@ def _band_sigs_wide_from_h(th: DataFrame, with_n: bool = False) -> DataFrame:
         )
         for b in range(_MINHASH_B)
     ]
-    extra = ["n"] if with_n else []
+    extra = ("n",) if with_n else ()
     wide = mins.select(
         "doc_id",
         *[sig_col[b].alias(f"s{b}") for b in range(_MINHASH_B)],
         *extra,
     )
-    bands = F.array(
+    return _band_explode(wide, "doc_id", _MINHASH_B, extra)
+
+
+def _band_explode(
+    wide: DataFrame, key: str, bands: int, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(key, s0..s{B-1}, *carry) → (key, band, sig, s0..s{B-2}, *carry):
+    one row per (band, sig), every EARLIER band's signature riding
+    along as a scalar column — the input layout of
+    ``_first_match_band_join``, shared by the MinHash family and
+    sim_lsh_rp_pairs."""
+    structs = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"), F.col(f"s{b}").alias("sig")
-            )
-            for b in range(_MINHASH_B)
+            F.struct(F.lit(b).alias("band"), F.col(f"s{b}").alias("sig"))
+            for b in range(bands)
         ]
     )
+    earlier = [F.col(f"s{j}") for j in range(bands - 1)]
     return wide.select(
-        "doc_id",
-        F.explode(bands).alias("bs"),
-        *[F.col(f"s{j}") for j in range(_MINHASH_B - 1)],
-        *extra,
+        key, F.explode(structs).alias("bs"), *earlier, *carry
     ).select(
-        "doc_id",
+        key,
         F.col("bs.band").alias("band"),
         F.col("bs.sig").alias("sig"),
-        *[F.col(f"s{j}") for j in range(_MINHASH_B - 1)],
-        *extra,
+        *earlier,
+        *carry,
     )
+
+
+def _first_match_band_join(
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    ids: tuple[str, str],
+    bands: int,
+    cond: Column,
+    carry: tuple[str, ...] = (),
+    key: str = "doc_id",
+) -> DataFrame:
+    """(id_a, id_b) candidate pairs of a banded-LSH equi-join, each
+    emitted EXACTLY ONCE: from its lowest matching band (round 10).
+
+    ``sigs_a`` / ``sigs_b`` are ``_band_explode`` frames (the two sides
+    may be filtered differently: new×ref, train×eval).  Side A is
+    projected to (id_a, band, sig, <c>a…, sa0..) and side B to (id_b,
+    band_b, sig_b, <c>b…, sb0..), where each ``carry`` column c becomes
+    ``c + "a"`` / ``c + "b"`` (n → na / nb); ``cond`` is the caller's
+    own extra join condition over those names (id order, the exact-int
+    size-ratio prune, role prunes).  The join key is (band, sig), and a
+    joined row survives only if no EARLIER band also matches — unrolled
+    scalar comparisons, b−1 of them (the CLAUDE.md no-HOF-on-pair-rows
+    rule) — which deletes both the ~1.5-2.6× duplicate pair stream (at
+    j ≈ τ a true pair matches most bands) and the pair-stream
+    ``.distinct()`` exchange that deduplicated it.
+    tests/test_properties.py pins exactly-once emission against the
+    distinct any-band join."""
+    id_a, id_b = ids
+    earlier = range(bands - 1)
+    sa = sigs_a.select(
+        F.col(key).alias(id_a),
+        "band",
+        "sig",
+        *[F.col(c).alias(c + "a") for c in carry],
+        *[F.col(f"s{j}").alias(f"sa{j}") for j in earlier],
+    )
+    sb = sigs_b.select(
+        F.col(key).alias(id_b),
+        F.col("band").alias("band_b"),
+        F.col("sig").alias("sig_b"),
+        *[F.col(c).alias(c + "b") for c in carry],
+        *[F.col(f"s{j}").alias(f"sb{j}") for j in earlier],
+    )
+    first_match = F.lit(True)
+    for j in earlier:
+        first_match = first_match & (
+            (F.col("band") <= j) | (F.col(f"sa{j}") != F.col(f"sb{j}"))
+        )
+    return sa.join(
+        sb,
+        (F.col("band") == F.col("band_b"))
+        & (F.col("sig") == F.col("sig_b"))
+        & cond
+        & first_match,
+    ).select(id_a, id_b)
 
 
 # Shared CTE prefix: tokens → seeded min-hashes → banded signatures.
@@ -707,13 +799,12 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-INT size-ratio prune in the join condition (J ≥ τ forces
     τ·max(na,nb) ≤ min — lossless for the verified output, kills
     length-incompatible LSH collisions before any array ships) under
-    the FIRST-MATCH-BAND discipline (round 10): each side carries its
-    earlier bands' signatures as scalar columns
-    (_band_sigs_wide_from_h) and a joined row survives only if no
+    the FIRST-MATCH-BAND discipline (round 10,
+    ``_first_match_band_join``): each side carries its earlier bands'
+    signatures as scalar columns and a joined row survives only if no
     earlier band also matches — so every candidate pair is emitted
     EXACTLY ONCE and the pair-stream .distinct() exchange is deleted
-    outright (unrolled scalar comparisons, b−1 of them, per the
-    CLAUDE.md no-HOF-on-pair-rows rule);
+    outright;
     (4) exact-Jaccard verify once per representative pair, projecting
     the packed arrays away in the verify stage itself and emitting
     SCALARS (_verify_expand); (5) member expansion at the end,
@@ -791,50 +882,18 @@ def _minhash_rep_candidates(
     one-shot plan."""
     toks = _doc_tokens(spark, sf_dir)
     grp = _collapse_sets(toks, "minhash")
-    rep_h = grp.select(
-        F.col("rep").alias("doc_id"), F.explode("codes").alias("c")
-    ).select("doc_id", F.expr("c div 2147483648").alias("h"))
-    sigs = _band_sigs_wide_from_h(rep_h)
     sizes = grp.select(
         F.col("rep").alias("doc_id"), F.size("codes").alias("n")
     )
-    sa = sigs.join(sizes, "doc_id").select(
-        F.col("doc_id").alias("doc_a"),
-        "band",
-        "sig",
-        F.col("n").alias("na"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(_MINHASH_B - 1)],
+    sigs = _band_sigs_wide_from_h(_rep_hashes(grp)).join(sizes, "doc_id")
+    candidates = _first_match_band_join(
+        sigs,
+        sigs,
+        ("doc_a", "doc_b"),
+        _MINHASH_B,
+        (F.col("doc_a") < F.col("doc_b")) & _size_ratio_prune(),
+        carry=("n",),
     )
-    sb = sigs.join(sizes, "doc_id").select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("n").alias("nb"),
-        *[F.col(f"s{j}").alias(f"sb{j}") for j in range(_MINHASH_B - 1)],
-    )
-    # First-match-band filter (round 10): keep a joined row only if no
-    # EARLIER band also matches, so each candidate pair is emitted
-    # exactly once and the pair-stream .distinct() disappears — all
-    # scalar comparisons, unrolled over the b−1 earlier bands (the
-    # CLAUDE.md lambda rule: never a HOF over pair-proportional rows).
-    first_match = F.lit(True)
-    for j in range(_MINHASH_B - 1):
-        first_match = first_match & (
-            (F.col("band") <= j) | (F.col(f"sa{j}") != F.col(f"sb{j}"))
-        )
-    candidates = sa.join(
-        sb,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("sig") == F.col("sig_b"))
-        & (F.col("doc_a") < F.col("doc_b"))
-        # size-ratio prune, EXACT-INT (the _JAC_TAU_NUM note):
-        # J >= tau forces tau*max <= min; verified output is
-        # unchanged, the array-shipping verify gets strictly fewer
-        # candidate pairs.
-        & (F.col("na") * _JAC_TAU_DEN >= F.col("nb") * _JAC_TAU_NUM)
-        & (F.col("nb") * _JAC_TAU_DEN >= F.col("na") * _JAC_TAU_NUM)
-        & first_match,
-    ).select("doc_a", "doc_b")
     return candidates, grp
 
 
@@ -1155,14 +1214,16 @@ def dedup_near_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest near-dup index at 100 TB.
 
     Round 11: the band join adopted the FIRST-MATCH-BAND discipline
-    (uniform across every banded operator since this round) — a pair
+    of the MinHash family's ``_first_match_band_join`` — a pair
     within Hamming ≤ {d} agrees on up to {b} bands and was emitted
     once per agreeing band, then deduplicated by a pair-stream
     .distinct() exchange; now a joined row survives only if no
     EARLIER band also agrees, so emission is exactly-once and the
     exchange is deleted.  Uniquely cheap here: both full fingerprints
     already ride the join, so the earlier-band comparisons are plain
-    shift/mask expressions on fp_a/fp_b — no extra columns at all.
+    shift/mask expressions on fp_a/fp_b — no extra columns at all,
+    which is why this op keeps its own loop instead of the shared
+    join.
     [MEASURED sf0.1] old duplicate stream 4,451,604 rows over
     3,420,908 distinct candidates (1.30×); first-match emits exactly
     the distinct count (asserted in-session), output hash-identical.
@@ -1556,11 +1617,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental output ⊆ full output restricted to new×ref pairs (the
     subset law a user migrating between the two relies on).
 
-    Round 11: the band join adopted the first-match-band discipline
-    (earlier bands' signatures as b−1 scalar columns in the join
-    condition — exactly-once candidate emission, the pair-stream
-    .distinct() exchange deleted) plus the EXACT-INT size-ratio
-    prune, both back-ported from the full-corpus twin; with_n=True
+    The band join is the family's one ``_first_match_band_join``
+    (exactly-once candidate emission, no pair-stream .distinct()
+    exchange) with the EXACT-INT size-ratio prune
+    (``_size_ratio_prune``) as its extra condition; with_n=True
     computes the per-doc set size inside the signature hash
     aggregate, so the prune costs no extra shuffle.  Output is
     invariant (the prune is lossless for verified ≥ τ pairs;
@@ -1571,33 +1631,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.select("doc_id", poly_hash("token").alias("h")), with_n=True
     )
     is_new = F.col("doc_id") % _INCR_MOD == 0
-    sa = sigs.filter(is_new).select(
-        F.col("doc_id").alias("doc_a"),
-        "band",
-        "sig",
-        F.col("n").alias("na"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(_MINHASH_B - 1)],
+    candidates = _first_match_band_join(
+        sigs.filter(is_new),
+        sigs.filter(~is_new),
+        ("doc_a", "doc_b"),
+        _MINHASH_B,
+        _size_ratio_prune(),
+        carry=("n",),
     )
-    sb = sigs.filter(~is_new).select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("n").alias("nb"),
-        *[F.col(f"s{j}").alias(f"sb{j}") for j in range(_MINHASH_B - 1)],
-    )
-    first_match = F.lit(True)
-    for j in range(_MINHASH_B - 1):
-        first_match = first_match & (
-            (F.col("band") <= j) | (F.col(f"sa{j}") != F.col(f"sb{j}"))
-        )
-    candidates = sa.join(
-        sb,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("sig") == F.col("sig_b"))
-        & (F.col("na") * _JAC_TAU_DEN >= F.col("nb") * _JAC_TAU_NUM)
-        & (F.col("nb") * _JAC_TAU_DEN >= F.col("na") * _JAC_TAU_NUM)
-        & first_match,
-    ).select("doc_a", "doc_b")
     return (
         _pair_jaccard(toks, candidates)
         .filter(F.col("jaccard") >= _JAC_TAU)

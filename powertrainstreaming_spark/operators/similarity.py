@@ -1039,8 +1039,8 @@ def _lsh_sig_exprs(mod: Column) -> list[Column]:
     plane is never evaluated (CASE branches are lazy in codegen), so
     signature cost tracks the active plane count, not _LSH_MAX_BITS.
     Returned as raw int columns (one per band) so the caller can lay
-    them out as s0..s{b−1} scalar columns — the wide shape the
-    first-match-band join discipline needs (round 11)."""
+    them out as s0..s{b−1} scalar columns — the wide shape
+    ``dedup._band_explode`` takes."""
     sigs = []
     for band in range(_LSH_BANDS):
         sig = F.lit(0)
@@ -1133,12 +1133,12 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated by a self-equi-join on the band key — the shuffle is keyed
     on (band, sig), candidate volume is Σ|bucket|² per band, never n².
     Rerank: exact dot on the exactly-once candidate set, keep sim ≥ τ.
-    Round 11: the band join adopted the FIRST-MATCH-BAND discipline
-    (each band's sig computed once as a scalar column, earlier bands'
-    sigs carried on the sig rows, pair emitted from its lowest
-    matching band only) — the pair-stream .distinct() exchange that
-    deduplicated the multi-band emissions is deleted, matching every
-    other banded operator in the package.  [MEASURED sf0.1] the old
+    The band join is the MinHash family's ``_first_match_band_join``
+    over ``_band_explode``d sigs (each band's sig computed once as a
+    scalar column, earlier bands' sigs carried on the sig rows, pair
+    emitted from its lowest matching band only) — no pair-stream
+    .distinct() exchange deduplicates multi-band emissions.
+    [MEASURED sf0.1, when this op moved to first-match] the old
     duplicate stream was 1,175,817 rows over 481,109 distinct
     candidates (2.44×); at the 1000× tier (2.27 B emitted pairs) the
     deleted exchange covered a ~2.4× multiple of that stream.
@@ -1151,6 +1151,11 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction exactly (deterministic codebook), so correctness is
     hash-checked, approximation and all.
     """
+    from powertrainstreaming_spark.operators.dedup import (
+        _band_explode,
+        _first_match_band_join,
+    )
+
     emb = load(spark, sf_dir, "embeddings")
     # ladder input stays the TOTAL corpus size (mirrors the oracle's n)
     ncnt = emb.agg(F.count(F.lit(1)).alias("n"))
@@ -1200,10 +1205,10 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).isNull()
     )
-    # Wide signature layout (round 11): compute each band's sig ONCE
-    # as a plain column, then explode the (band, sig) structs while
-    # carrying every EARLIER band's sig as s0..s{b-2} — the
-    # first-match-band input shape shared with dedup_near_minhash.
+    # Wide signature layout: compute each band's sig ONCE as a plain
+    # column; _band_explode then lays out (band, sig) rows carrying
+    # every EARLIER band's sig, the input of the MinHash family's
+    # _first_match_band_join.
     sig_exprs = _lsh_sig_exprs(F.col("mod"))
     wide = (
         grp.crossJoin(F.broadcast(ncnt))
@@ -1213,50 +1218,15 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[sig_exprs[b].alias(f"s{b}") for b in range(_LSH_BANDS)],
         )
     )
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), F.col(f"s{b}").alias("sig"))
-            for b in range(_LSH_BANDS)
-        ]
+    sigs = _band_explode(wide, "vec_id", _LSH_BANDS)
+    cand = _first_match_band_join(
+        sigs,
+        sigs,
+        ("vec_a", "vec_b"),
+        _LSH_BANDS,
+        F.col("vec_a") < F.col("vec_b"),
+        key="vec_id",
     )
-    sigs = wide.select(
-        "vec_id",
-        F.explode(band_structs).alias("bs"),
-        *[F.col(f"s{j}") for j in range(_LSH_BANDS - 1)],
-    ).select(
-        "vec_id",
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-        *[F.col(f"s{j}") for j in range(_LSH_BANDS - 1)],
-    )
-    a = sigs.select(
-        F.col("vec_id").alias("vec_a"),
-        "band",
-        F.col("sig").alias("sig_a"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(_LSH_BANDS - 1)],
-    )
-    b = sigs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("band").alias("band_b"),
-        F.col("sig").alias("sig_b"),
-        *[F.col(f"s{j}").alias(f"sb{j}") for j in range(_LSH_BANDS - 1)],
-    )
-    # First-match-band: keep a joined row only if no EARLIER band also
-    # matches — exactly-once candidate emission, the pair-stream
-    # .distinct() exchange deleted (unrolled scalar comparisons per
-    # the CLAUDE.md lambda rule; b-1 = 5 of them).
-    first_match = F.lit(True)
-    for j in range(_LSH_BANDS - 1):
-        first_match = first_match & (
-            (F.col("band") <= j) | (F.col(f"sa{j}") != F.col(f"sb{j}"))
-        )
-    cand = a.join(
-        b,
-        (a.band == b.band_b)
-        & (F.col("sig_a") == F.col("sig_b"))
-        & (F.col("vec_a") < F.col("vec_b"))
-        & first_match,
-    ).select("vec_a", "vec_b")
     reps = grp.select("rep", "embedding", "members")
     ea = reps.select(
         F.col("rep").alias("vec_a"),
@@ -1378,60 +1348,18 @@ def sim_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts and the pass is one map-side semi-filter of the
     inverted index + a candidate-sized verify, corpus-linear.
     """
-    from powertrainstreaming_spark.functions.exprs import (
-        POLY_B2,
-        POLY_M2,
-        poly_hash,
-    )
     from powertrainstreaming_spark.operators.dedup import (
-        _JAC_COLLAPSE_MAX_MULT,
+        _collapse_sets,
         _doc_tokens,
+        _role_members,
     )
 
-    toks = _doc_tokens(spark, sf_dir)
-    code = (
-        poly_hash("token") * F.lit(2_147_483_648)
-        + poly_hash("token", POLY_B2, POLY_M2)
-    ).alias("code")
-    sets_ = (
-        toks.select("doc_id", code)
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("code")).alias("codes"))
-    )
-    grp = (
-        sets_.groupBy("codes")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("doc_id") % _CONTAIN_QMOD == 0, F.col("doc_id")
-                    )
-                )
-            ).alias("q_members"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("doc_id") % _CONTAIN_QMOD != 0, F.col("doc_id")
-                    )
-                )
-            ).alias("c_members"),
-            F.count(F.lit(1)).alias("m"),
-        )
-        .filter(
-            F.assert_true(
-                F.col("m") <= F.lit(_JAC_COLLAPSE_MAX_MULT),
-                F.concat(
-                    F.lit(
-                        "containment duplicate-collapse cap exceeded: one "
-                        "token set has multiplicity "
-                    ),
-                    F.col("m").cast("string"),
-                    F.lit(f" > {_JAC_COLLAPSE_MAX_MULT}"),
-                ),
-            ).isNull()
-        )
-        .localCheckpoint()
+    is_query = F.col("doc_id") % _CONTAIN_QMOD == 0
+    grp = _collapse_sets(
+        _doc_tokens(spark, sf_dir),
+        "containment",
+        _role_members(is_query, "q_members"),
+        _role_members(~is_query, "c_members"),
     )
     rep_toks = grp.select(
         F.col("rep").alias("doc_id"), F.explode("codes").alias("token")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from powertrainstreaming_spark.functions.exprs import money_avg
+from powertrainstreaming_spark.functions.exprs import money_avg, money_frame_sum
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
@@ -151,12 +151,8 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-99, Window.currentRow)
     )
     n = F.count(F.lit(1)).over(w).cast("bigint")
-    s = F.sum(F.col("value").cast("decimal(18,6)")).over(w).cast("double")
-    s2 = (
-        F.sum((F.col("value") * F.col("value")).cast("decimal(18,6)"))
-        .over(w)
-        .cast("double")
-    )
+    s = money_frame_sum("value", w)
+    s2 = money_frame_sum(F.col("value") * F.col("value"), w)
     base = ev.select("event_id", "event_type", "ts", "value",
                      n.alias("n"), s.alias("s"), s2.alias("s2"))
     mean = F.col("s") / F.col("n")
@@ -834,14 +830,13 @@ def ts_level_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     before = w.rowsBetween(-_SHIFT_W, -1)
     after = w.rowsBetween(0, _SHIFT_W - 1)
-    dec = F.col("value").cast("decimal(18,6)")
     contrast = ev.select(
         "event_type",
         "event_id",
         "ts",
-        F.sum(dec).over(before).cast("double").alias("sum_before"),
+        money_frame_sum("value", before).alias("sum_before"),
         F.count(F.lit(1)).over(before).alias("n_before"),
-        F.sum(dec).over(after).cast("double").alias("sum_after"),
+        money_frame_sum("value", after).alias("sum_after"),
         F.count(F.lit(1)).over(after).alias("n_after"),
     ).filter(
         (F.col("n_before") == _SHIFT_W) & (F.col("n_after") == _SHIFT_W)

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from powertrainstreaming_spark.functions.exprs import money_frame_sum
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
@@ -137,9 +138,6 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEC = "decimal(18,6)"
-
-
 @query(
     "win_running_sum",
     oracle="""
@@ -167,7 +165,7 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderdate",
         "o_totalprice",
-        F.sum(F.col("o_totalprice").cast(_DEC)).over(w).cast("double").alias("running_total"),
+        money_frame_sum("o_totalprice", w).alias("running_total"),
     )
 
 
@@ -194,7 +192,7 @@ def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load(spark, sf_dir, "orders")
     w = Window.orderBy("o_orderdate", "o_orderkey").rowsBetween(-6, Window.currentRow)
-    frame_sum = F.sum(F.col("o_totalprice").cast(_DEC)).over(w).cast("double")
+    frame_sum = money_frame_sum("o_totalprice", w)
     frame_n = F.count(F.lit(1)).over(w)
     return orders.select(
         "o_orderkey",
@@ -337,9 +335,7 @@ def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
-        F.sum(F.col("o_totalprice").cast(_DEC)).over(w).cast("double").alias(
-            "trailing_30d_total"
-        ),
+        money_frame_sum("o_totalprice", w).alias("trailing_30d_total"),
         F.count(F.lit(1)).over(w).alias("trailing_30d_orders"),
     )
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
 from dataclasses import dataclass
 
 import duckdb
@@ -81,3 +82,35 @@ def compare(name, spark_df, con, oracle_sql) -> tuple[CompareResult, list[str], 
         hash_oracle=canonical_hash(o_rows, o_cols),
     )
     return res, canonical_lines(s_rows, s_cols), canonical_lines(o_rows, o_cols)
+
+
+def check_queries(spark, sf_dir, names, fns, oracles) -> list[str]:
+    """Run each named query and hash-compare it to its oracle, printing
+    one ``name  status  seconds`` line per query as it finishes.
+    ``fns`` maps name → ``fn(spark, sf_dir)``; a name without an entry
+    in ``oracles`` is run rows-only.  Errors are reported and the loop
+    continues.  Returns the names that mismatched or raised."""
+    failures = []
+    with oracle_connection(sf_dir) as con:
+        for name in names:
+            t0 = time.perf_counter()
+            try:
+                df = fns[name](spark, sf_dir)
+                if name not in oracles:
+                    status = f"rows-only ({df.count()} rows)"
+                else:
+                    res, _, _ = compare(name, df, con, oracles[name])
+                    status = "ok" if res.ok else (
+                        f"MISMATCH rows {res.rows_spark}/{res.rows_oracle} "
+                        f"hash {res.hash_spark[:8]}/{res.hash_oracle[:8]}"
+                    )
+                    if not res.ok:
+                        failures.append(name)
+            except Exception as exc:  # noqa: BLE001 — report and continue
+                status = f"ERROR {type(exc).__name__}: {exc}"
+                failures.append(name)
+            print(
+                f"{name:40s} {status:30s} {time.perf_counter() - t0:6.1f}s",
+                flush=True,
+            )
+    return failures

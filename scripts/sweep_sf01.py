@@ -31,33 +31,18 @@ SF = os.environ.get(
 def main() -> int:
     from powertrainstreaming_spark.plans.registry import all_defs
     from powertrainstreaming_spark.session import get_spark
-    from powertrainstreaming_spark.testing import compare, oracle_connection
+    from powertrainstreaming_spark.testing import check_queries
 
     spark = get_spark(app_name="pts-sweep-sf01")
-    con = oracle_connection(SF)
-    failures = []
-    for name, qd in all_defs().items():
-        t0 = time.perf_counter()
-        try:
-            df = qd.fn(spark, SF)
-            if qd.oracle is None:
-                n = df.count()
-                status = f"rows-only ({n} rows)"
-            else:
-                res, _, _ = compare(name, df, con, qd.oracle)
-                if res.ok:
-                    status = "ok"
-                else:
-                    status = (
-                        f"MISMATCH rows {res.rows_spark}/{res.rows_oracle} "
-                        f"hash {res.hash_spark[:8]}/{res.hash_oracle[:8]}"
-                    )
-                    failures.append(name)
-        except Exception as exc:  # noqa: BLE001 — report and continue the sweep
-            status = f"ERROR {type(exc).__name__}: {exc}"
-            failures.append(name)
-        print(f"{name:40s} {status:30s} {time.perf_counter() - t0:6.1f}s", flush=True)
-    print(f"\n{len(all_defs())} queries, {len(failures)} failures: {failures}")
+    defs = all_defs()
+    failures = check_queries(
+        spark,
+        SF,
+        list(defs),
+        {name: qd.fn for name, qd in defs.items()},
+        {name: qd.oracle for name, qd in defs.items() if qd.oracle is not None},
+    )
+    print(f"\n{len(defs)} queries, {len(failures)} failures: {failures}")
     return 1 if failures else 0
 
 

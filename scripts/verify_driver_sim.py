@@ -30,7 +30,7 @@ def main() -> int:
     spark = SparkSession.builder.master("local[8]").getOrCreate()
 
     import __spark_entry__ as e
-    from powertrainstreaming_spark.testing import compare, oracle_connection
+    from powertrainstreaming_spark.testing import check_queries
 
     rows = e.entry(spark).collect()
     assert len(rows) >= 0 and len(rows[0].__fields__) > 0
@@ -39,29 +39,7 @@ def main() -> int:
     qs = e.queries()
     oracles = e.oracle_sql()
     names = list(qs)[:WINDOW] + [a for a in sys.argv[1:] if a in qs]
-    con = oracle_connection(SF)
-    failures = []
-    for name in names:
-        t0 = time.perf_counter()
-        try:
-            df = qs[name](spark, SF)
-            if name not in oracles:
-                status = f"rows-only ({df.count()} rows)"
-            else:
-                res, _, _ = compare(name, df, con, oracles[name])
-                status = "ok" if res.ok else (
-                    f"MISMATCH rows {res.rows_spark}/{res.rows_oracle} "
-                    f"hash {res.hash_spark[:8]}/{res.hash_oracle[:8]}"
-                )
-                if not res.ok:
-                    failures.append(name)
-        except Exception as exc:  # noqa: BLE001 — report and continue
-            status = f"ERROR {type(exc).__name__}: {exc}"
-            failures.append(name)
-        print(
-            f"{name:40s} {status:30s} {time.perf_counter() - t0:6.1f}s",
-            flush=True,
-        )
+    failures = check_queries(spark, SF, names, qs, oracles)
     print(f"\n{len(names)} checked, {len(failures)} failures: {failures}")
     return 1 if failures else 0
 

@@ -32,6 +32,15 @@ def _plan(df, mode: str = "formatted", *, final: bool = False) -> str:
     )
 
 
+def _final_plan(df) -> str:
+    """AQE's executed final plan alone: collect, explain ``simple``, and
+    cut at the TOP-LEVEL "Initial Plan" marker.  The bare marker is
+    not enough: a runtime-filter subquery prints its own indented
+    Initial Plan section first, and cutting there would silently
+    shorten what the absence asserts inspect."""
+    return _plan(df, "simple", final=True).split("\n+- == Initial Plan ==")[0]
+
+
 def test_q1_pushes_filter_and_prunes_columns(spark):
     """The shipdate predicate must reach the parquet reader, and the
     scan schema must exclude unreferenced columns (16-col table, 7
@@ -159,12 +168,11 @@ def test_split_audit_scans_corpus_once_map_only(spark):
     """The split assignment is a row-local expression: exactly one
     parquet scan of documents, and the only wide exchange is the
     bounded (lang, split) aggregation."""
-    plan = _plan(all_defs()["split_train_holdout"].fn(spark, SF), "simple", final=True)
     # AQE's explain repeats the plan (Final + Initial sections); count
     # scans within the executed Final Plan only.
-    final_section = plan.split("== Initial Plan ==")[0]
-    assert final_section.count("Scan parquet") == 1
-    read_schema = next(l for l in plan.splitlines() if "ReadSchema" in l)
+    final_plan = _final_plan(all_defs()["split_train_holdout"].fn(spark, SF))
+    assert final_plan.count("Scan parquet") == 1
+    read_schema = next(l for l in final_plan.splitlines() if "ReadSchema" in l)
     assert "text" not in read_schema  # assignment never reads the payload
 
 
@@ -283,10 +291,7 @@ def test_importance_sample_is_map_only_scan(spark):
 def test_zorder_interleave_stays_in_codegen_single_shuffle(spark):
     """The Morton interleave is unrolled integer arithmetic inside
     whole-stage codegen; the only exchange is the final aggregate's."""
-    plan = _plan(
-        all_defs()["layout_zorder_cluster"].fn(spark, SF), "simple", final=True
-    )
-    final_plan = plan.split("== Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()["layout_zorder_cluster"].fn(spark, SF))
     assert "Python" not in final_plan
     assert final_plan.count("Exchange hashpartitioning") == 1
     assert "*(" in final_plan
@@ -306,10 +311,7 @@ def test_scalar_subqueries_are_decorrelated(spark):
     exactly ONE subquery (the uncorrelated global average, a one-row
     broadcast) and a hash/sort-merge join on o_custkey — never a
     nested-loop shape re-evaluating per outer row."""
-    plan = _plan(
-        all_defs()["filter_scalar_subquery"].fn(spark, SF), "simple", final=True
-    )
-    final_plan = plan.split("== Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()["filter_scalar_subquery"].fn(spark, SF))
     assert final_plan.count("+- Subquery subquery") == 1, final_plan
     assert any(
         j in final_plan
@@ -344,8 +346,7 @@ def test_bm25_filters_tokens_before_any_shuffle(spark):
     final plan must show >=3 broadcast joins (query vocab filter,
     query expansion, df side, corpus stats) and no cross-product
     flavor beyond the one-row stats broadcast."""
-    plan = _plan(all_defs()["text_bm25_topk"].fn(spark, SF), "simple", final=True)
-    final_plan = plan.split("== Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()["text_bm25_topk"].fn(spark, SF))
     assert final_plan.count("BroadcastHashJoin") >= 3, final_plan
     assert "CartesianProduct" not in final_plan
     assert "SortMergeJoin" not in final_plan, (
@@ -362,9 +363,7 @@ def test_countmin_sketch_is_broadcast_and_bounded(spark):
     asserted at the source."""
     from powertrainstreaming_spark.operators.aggregates import _CMS_D, _CMS_W
 
-    df = all_defs()["agg_countmin_heavy"].fn(spark, SF)
-    plan = _plan(df, "simple", final=True)
-    final_plan = plan.split("== Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()["agg_countmin_heavy"].fn(spark, SF))
     assert "BroadcastHashJoin" in final_plan
     cells = (
         load(spark, SF, "documents")
@@ -380,10 +379,7 @@ def test_fuzzy_decontam_never_cartesian_and_checkpoints_collapse(spark):
     """The fuzzy decontamination pipeline inherits the banded blocking
     discipline: candidate generation is a (band, sig) equi-join, so no
     cross-product operator may appear anywhere in the final plan."""
-    plan = _plan(
-        all_defs()["corpus_decontam_minhash"].fn(spark, SF), "simple", final=True
-    )
-    final_plan = plan.split("\n+- == Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()["corpus_decontam_minhash"].fn(spark, SF))
     assert "CartesianProduct" not in final_plan
     assert "BroadcastNestedLoopJoin" not in final_plan
 
@@ -400,8 +396,7 @@ def test_quantile_twins_never_window_sort_doc_rows(spark):
         ("corpus_quality_gate_threshold", "score"),
         ("corpus_perplexity_bucket_cuts", "ce"),
     ):
-        plan = _plan(all_defs()[name].fn(spark, SF), "simple", final=True)
-        final_plan = plan.split("== Initial Plan ==")[0]
+        final_plan = _final_plan(all_defs()[name].fn(spark, SF))
         assert "percent_rank" not in final_plan, name
         assert "ntile" not in final_plan, name
         assert "BroadcastHashJoin" in final_plan, name
@@ -430,8 +425,7 @@ def test_shingle_census_shuffles_key_on_fingerprint_not_string(spark):
     import re
 
     for name in ("text_repeated_ngrams", "text_ngram_novelty"):
-        plan = _plan(all_defs()[name].fn(spark, SF), "simple", final=True)
-        final_plan = plan.split("== Initial Plan ==")[0]
+        final_plan = _final_plan(all_defs()[name].fn(spark, SF))
         exchanges = [
             l
             for l in final_plan.splitlines()
@@ -457,12 +451,9 @@ def test_centroid_assign_is_never_nested_loop(spark, name):
     """Every trained-codebook op assigns vectors to cells through the
     map-only GEMM (similarity._assign_cells): a codebook crossJoin
     would surface as a BroadcastNestedLoopJoin, and none may appear
-    anywhere in the final plan.  The final plan ends at the TOP-LEVEL
-    "Initial Plan" marker: a runtime-filter subquery prints its own
-    indented one first (sim_knn_ivf_pq has such a bloom-filter
-    subquery)."""
-    plan = _plan(all_defs()[name].fn(spark, SF), "simple", final=True)
-    final_plan = plan.split("\n+- == Initial Plan ==")[0]
+    anywhere in the final plan (sim_knn_ivf_pq's also carries a
+    bloom-filter subquery — see ``_final_plan``)."""
+    final_plan = _final_plan(all_defs()[name].fn(spark, SF))
     assert "BroadcastNestedLoopJoin" not in final_plan
 
 
@@ -476,12 +467,7 @@ def test_semantic_cluster_dedup_cell_blocked_never_cartesian(spark, name):
     carry the (probe) cell as an equi-key."""
     import re
 
-    plan = _plan(
-        all_defs()[name].fn(spark, SF),
-        "simple",
-        final=True,
-    )
-    final_plan = plan.split("\n+- == Initial Plan ==")[0]
+    final_plan = _final_plan(all_defs()[name].fn(spark, SF))
     assert "CartesianProduct" not in final_plan
     assert "BroadcastNestedLoopJoin" not in final_plan
     assert re.search(

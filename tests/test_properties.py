@@ -140,6 +140,48 @@ def test_minhash_chunked_verify_equals_one_shot(spark):
     assert union.count() == one_shot.count() > 0
 
 
+def test_first_match_band_join_emits_each_pair_exactly_once(spark):
+    """The banded family's one candidate join keeps a joined row only
+    from the pair's LOWEST matching band.  On a synthetic 4-band sig
+    frame where pairs share 1 to 4 bands, its output must have no
+    duplicate pair and equal the distinct any-band join exactly."""
+    from powertrainstreaming_spark.operators.dedup import (
+        _band_explode,
+        _first_match_band_join,
+    )
+
+    bands = 4
+    # s_b = i div g_b with a different group width per band: adjacent
+    # ids share 2-4 bands, e.g. (0, 1) all four, (1, 2) bands 1-3,
+    # (3, 4) bands 1 and 3, (0, 5) band 3 only.
+    wide = spark.createDataFrame(
+        [(i, i // 2, i // 3, i // 4, i // 6) for i in range(24)],
+        ["doc_id", "s0", "s1", "s2", "s3"],
+    )
+    sigs = _band_explode(wide, "doc_id", bands)
+    got = _first_match_band_join(
+        sigs, sigs, ("doc_a", "doc_b"), bands, F.col("doc_a") < F.col("doc_b")
+    ).localCheckpoint()
+    a = sigs.select(F.col("doc_id").alias("doc_a"), "band", "sig")
+    b = sigs.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("band").alias("band_b"),
+        F.col("sig").alias("sig_b"),
+    )
+    any_band = a.join(
+        b,
+        (F.col("band") == F.col("band_b"))
+        & (F.col("sig") == F.col("sig_b"))
+        & (F.col("doc_a") < F.col("doc_b")),
+    ).select("doc_a", "doc_b")
+    want = any_band.distinct()
+    n_any, n_want = any_band.count(), want.count()
+    assert n_any > n_want > 0  # some pairs really match on several bands
+    assert got.count() == got.distinct().count() == n_want
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_ivf_knn_recall_vs_bruteforce(spark):
     """IVF search returns true top-k WITHIN its searched buckets, and
     its overlap with the exhaustive top-10 is the bucket-pruning
