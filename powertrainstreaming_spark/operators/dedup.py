@@ -30,6 +30,7 @@ from powertrainstreaming_spark.functions.exprs import (
 )
 from powertrainstreaming_spark.operators.similarity import (
     _adaptive_cells,
+    _cell_pairs,
     _O_ADAPT_CELLS,
 )
 from powertrainstreaming_spark.plans.registry import query
@@ -211,9 +212,9 @@ def dedup_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tau_pairs(toks)
 
 
-# Same cap + assert pattern as similarity.py's rp_pairs collapse: fail
-# loudly if one token set has a verbatim multiplicity that would put an
-# unbounded members array in a single aggregation row.
+# Hard cap on the exact-duplicate multiplicity one collapse group may
+# carry in its members array (~80 MB of int64 ids at the cap), for every
+# collapse of the near-dup family and similarity.sim_lsh_rp_pairs'.
 _JAC_COLLAPSE_MAX_MULT = 10_000_000
 
 # τ as an EXACT integer fraction (19/20): every candidate-side bound
@@ -247,6 +248,28 @@ def _role_members(pred: Column, name: str) -> Column:
     ).alias(name)
 
 
+def _collapse_cap(label: str, unit: str) -> Column:
+    """The duplicate-collapse multiplicity cap, as a filter predicate
+    over a collapse group's member count ``m``: fail LOUDLY when one
+    ``unit`` (a token set, an embedding) has a verbatim multiplicity
+    that would put an unbounded members array in a single aggregation
+    row.  assert_true evaluates JVM-side per group and returns NULL on
+    success, so the filter keeps every row and adds nothing to the
+    result; being a filter predicate it cannot be pruned away like a
+    dropped column would be."""
+    return F.assert_true(
+        F.col("m") <= F.lit(_JAC_COLLAPSE_MAX_MULT),
+        F.concat(
+            F.lit(
+                f"{label} duplicate-collapse cap exceeded: one "
+                f"{unit} has multiplicity "
+            ),
+            F.col("m").cast("string"),
+            F.lit(f" > {_JAC_COLLAPSE_MAX_MULT}"),
+        ),
+    ).isNull()
+
+
 def _collapse_sets(toks: DataFrame, label: str, *members: Column) -> DataFrame:
     """EXACT-DUPLICATE COLLAPSE (the CLAUDE.md house rule): group
     documents by their exact token-code SET (sorted packed-int64
@@ -273,19 +296,7 @@ def _collapse_sets(toks: DataFrame, label: str, *members: Column) -> DataFrame:
             *(members or [F.collect_list("doc_id").alias("members")]),
             F.count(F.lit(1)).alias("m"),
         )
-        .filter(
-            F.assert_true(
-                F.col("m") <= F.lit(_JAC_COLLAPSE_MAX_MULT),
-                F.concat(
-                    F.lit(
-                        f"{label} duplicate-collapse cap exceeded: one "
-                        "token set has multiplicity "
-                    ),
-                    F.col("m").cast("string"),
-                    F.lit(f" > {_JAC_COLLAPSE_MAX_MULT}"),
-                ),
-            ).isNull()
-        )
+        .filter(_collapse_cap(label, "token set"))
         # Materialize the collapse ONCE (PageRank's localCheckpoint
         # pattern): grp feeds candidate generation (several self-derived
         # reads), both verify sides, and the within-group expansion —
@@ -939,26 +950,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from powertrainstreaming_spark.functions.exprs import dot_f, sim_round
 
     emb = load(spark, sf_dir, "embeddings")
-    cells = _adaptive_cells(emb)
-    a = cells.select(
-        F.col("vec_id").alias("keep_id"),
-        F.col("label"),
-        F.col("cell"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = cells.select(
-        F.col("vec_id").alias("drop_id"),
-        F.col("label").alias("label_b"),
-        F.col("cell").alias("cell_b"),
-        F.col("embedding").alias("emb_b"),
-    )
+    order = F.col("keep_id") < F.col("drop_id")
     drops = (
-        a.join(
-            b,
-            (a.label == b.label_b)
-            & (a.cell == b.cell_b)
-            & (F.col("keep_id") < F.col("drop_id")),
-        )
+        _cell_pairs(_adaptive_cells(emb), "keep_id", "drop_id", order)
         .filter(sim_round(dot_f("emb_a", "emb_b")) >= _EMB_TAU)
         .select("drop_id")
         .distinct()

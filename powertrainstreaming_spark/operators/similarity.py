@@ -28,6 +28,16 @@ from powertrainstreaming_spark.functions.exprs import (
 from powertrainstreaming_spark.plans.registry import query
 from powertrainstreaming_spark.sources.loaders import load
 
+# The assign/encode bodies shipped to Python workers call module-level
+# helpers (``_nearest2``), so this module is pickled BY VALUE, like the
+# other worker-callable operator modules: executors never need the
+# package importable.
+import sys as _sys
+
+from pyspark import cloudpickle as _cloudpickle
+
+_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+
 _PROBE_VEC_ID = 0
 
 
@@ -170,10 +180,25 @@ _O_ADAPT_CELLS = f"""
 """
 
 
-_CELL_SQL = " + ".join(
-    f"(CASE WHEN embedding[{i + 1}] > 0 THEN {2**i} ELSE 0 END)"
-    for i in range(_IVF_BITS)
-)
+def _cell_pairs(cells: DataFrame, id_a: str, id_b: str, order: Column) -> DataFrame:
+    """The blocked self-join of ``_adaptive_cells`` rows: every
+    (``id_a``, ``id_b``) pair sharing (label, cell) that satisfies
+    ``order`` (an id comparison), as ``id_a, label, cell, emb_a,
+    id_b, label_b, cell_b, emb_b`` — an equi-join on the block key,
+    never an unconditioned crossJoin."""
+    a = cells.select(
+        F.col("vec_id").alias(id_a),
+        F.col("label"),
+        F.col("cell"),
+        F.col("embedding").alias("emb_a"),
+    )
+    b = cells.select(
+        F.col("vec_id").alias(id_b),
+        F.col("label").alias("label_b"),
+        F.col("cell").alias("cell_b"),
+        F.col("embedding").alias("emb_b"),
+    )
+    return a.join(b, (a.label == b.label_b) & (a.cell == b.cell_b) & order)
 
 
 _PAIR_TAU = 0.3
@@ -225,28 +250,10 @@ def sim_pair_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py::test_cosine_pair_blocking_recall_ladder.
     """
     emb = load(spark, sf_dir, "embeddings")
-    cells = _adaptive_cells(emb)
-    a = cells.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("label"),
-        F.col("cell"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = cells.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("label").alias("label_b"),
-        F.col("cell").alias("cell_b"),
-        F.col("embedding").alias("emb_b"),
-    )
-    sim = sim_round(dot_f("emb_a", "emb_b"))
+    order = F.col("vec_a") < F.col("vec_b")
     return (
-        a.join(
-            b,
-            (a.label == b.label_b)
-            & (a.cell == b.cell_b)
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .withColumn("sim", sim)
+        _cell_pairs(_adaptive_cells(emb), "vec_a", "vec_b", order)
+        .withColumn("sim", sim_round(dot_f("emb_a", "emb_b")))
         .filter(F.col("sim") >= _PAIR_TAU)
         .select("vec_a", "vec_b", "label", "sim")
     )
@@ -293,24 +300,9 @@ def sim_topk_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the same quantizer cell, the IVF trade.
     """
     emb = load(spark, sf_dir, "embeddings")
-    cells = _adaptive_cells(emb)
-    a = cells.select(
-        "vec_id",
-        "label",
-        "cell",
-        F.col("embedding").alias("emb_a"),
-    )
-    b = cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("label_b"),
-        F.col("cell").alias("cell_b"),
-        F.col("embedding").alias("emb_b"),
-    )
-    pairs = a.join(
-        b,
-        (a.label == b.label_b)
-        & (a.cell == b.cell_b)
-        & (F.col("vec_id") != F.col("neighbor_id")),
+    order = F.col("vec_id") != F.col("neighbor_id")
+    pairs = _cell_pairs(
+        _adaptive_cells(emb), "vec_id", "neighbor_id", order
     ).select(
         "vec_id",
         "neighbor_id",
@@ -420,7 +412,7 @@ def sim_pair_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cells AS (
         SELECT vec_id, label, embedding,
-               CAST({_CELL_SQL} AS INT) AS cell
+               {_o_cell('embedding')} AS cell
         FROM embeddings),
     probe AS (SELECT embedding AS p_emb, cell AS p_cell FROM cells
               WHERE vec_id = {_PROBE_VEC_ID})
@@ -498,38 +490,64 @@ def _adaptive_k(n: int) -> int:
     return k
 
 
+def _dot(a: list[float], b: list[float]) -> float:
+    """Driver-side dot of two model-sized vectors (probe · centroid)."""
+    return sum(x * y for x, y in zip(a, b))
+
+
+def _nearest2(E, C, bias):
+    """The one nearest-centroid kernel: for every row of E, the column
+    of C with the highest score E @ Cᵀ − bias, and the next one.
+    ``bias`` is 0 for the inner-product ranking of the IVF cells and
+    ‖c‖²/2 per centroid for PQ's L2 ranking (argmin ‖x − c‖² =
+    argmax x·c − ‖c‖²/2).
+
+    Order is (score desc, column desc): `best` is the last-argmax, so
+    among equal scores the HIGHEST column wins; `second` is the
+    last-argmax once `best` is masked out, i.e. the next column in the
+    same order.  A one-column C has no second column, so there
+    `second = best` (the masked row is all −inf and its last-argmax is
+    the only column)."""
+    import numpy as np
+
+    sims = E @ C.T - bias
+    k = C.shape[0]
+    best = k - 1 - np.argmax(sims[:, ::-1], axis=1)
+    sims[np.arange(len(sims)), best] = -np.inf
+    second = k - 1 - np.argmax(sims[:, ::-1], axis=1)
+    return best, second
+
+
 def _assign_cells(
     emb: DataFrame, cent_list: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """The one nearest-centroid assign: every vector's nearest and
     second-nearest codebook cell, as ``vec_id, label, embedding, cell,
-    cell2``.  One numpy GEMM per Arrow batch (``mapInPandas``) against
-    the closure-captured codebook (k × d doubles — model-sized, shipped
-    with the task closure): map-only, no join, no shuffle.  A crossJoin
-    form would materialize n·k rows with an interpreted dot each, and
-    with k ∝ n (the _adaptive_k ladder) that is quadratic — the
-    round-11 perturbed probe measured such a trainer at 1351 s for
-    k = 2048 × 200k vectors, wholly assign-bound.
+    cell2``.  One numpy GEMM per Arrow batch (``mapInPandas`` over
+    ``_nearest2``, zero bias) against the closure-captured codebook
+    (k × d doubles — model-sized, shipped with the task closure):
+    map-only, no join, no shuffle.  A crossJoin form would materialize
+    n·k rows with an interpreted dot each, and with k ∝ n (the
+    _adaptive_k ladder) that is quadratic — the round-11 perturbed
+    probe measured such a trainer at 1351 s for k = 2048 × 200k
+    vectors, wholly assign-bound.
 
-    Order is (sim desc, cent_id desc): `cell` is the last-argmax, so
-    among equal sims the HIGHEST cent_id wins; `cell2` is the
-    last-argmax once `cell` is masked out, i.e. the next cell in the
-    same order.  Every caller gets `cell2` (one O(k) argmax per row
-    beside the O(d·k) GEMM); the multi-probe dedup op is the one that
-    reads it.  A one-centroid codebook has no second cell, so there
-    `cell2 = cell` (the masked row is all −inf and its last-argmax is
-    the only column) — k = 1 happens whenever the trainer sees one
-    distinct vector, since it initialises from the k smallest vec_ids.
-    Sims are BLAS sums, not ``dot_f``'s sequential fold, so a
-    last-ulp near-tie could in principle rank differently from a
-    SQL-side dot; test_assign_cells_matches_sequential_fold_reference
-    pins both cells against the fold on a codebook with forced ties."""
+    Columns are in cent_id order, so `cell` is the nearest cell with
+    ties to the HIGHEST cent_id and `cell2` the next one in the same
+    order.  Every caller gets `cell2` (one O(k) argmax per row beside
+    the O(d·k) GEMM); the multi-probe dedup op is the one that reads
+    it.  A one-centroid codebook gives `cell2 = cell` — k = 1 happens
+    whenever the trainer sees one distinct vector, since it
+    initialises from the k smallest vec_ids.  Sims are BLAS sums, not
+    ``dot_f``'s sequential fold, so a last-ulp near-tie could in
+    principle rank differently from a SQL-side dot;
+    test_assign_cells_matches_sequential_fold_reference pins both
+    cells against the fold on a codebook with forced ties."""
     import numpy as np
 
     order = sorted(cent_list)
     ids = np.array([cid for cid, _ in order], dtype=np.int64)
     C = np.array([c for _, c in order], dtype=np.float64)
-    k = len(order)
 
     def assign(batches):
         import pandas as pd
@@ -538,11 +556,7 @@ def _assign_cells(
             if len(pdf) == 0:
                 continue
             E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            sims = E @ C.T
-            # last-argmax = highest cent_id among ties
-            best = k - 1 - np.argmax(sims[:, ::-1], axis=1)
-            sims[np.arange(len(sims)), best] = -np.inf
-            second = k - 1 - np.argmax(sims[:, ::-1], axis=1)
+            best, second = _nearest2(E, C, 0.0)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -562,44 +576,101 @@ def _assign_cells(
     )
 
 
+def _init_codebook(emb: DataFrame, k: int) -> list[tuple[int, list[float]]]:
+    """No-RNG Lloyd's init shared by both trainers: the embeddings of
+    the k smallest vec_ids, as cent_ids 0..k−1 (fewer when the corpus
+    has fewer than k vectors)."""
+    init = emb.orderBy("vec_id").limit(k).collect()
+    return [(i, [float(x) for x in r.embedding]) for i, r in enumerate(init)]
+
+
+_Books = list[list[tuple[int, list[float]]]]  # (cent_id, centroid) per slice
+
+
+def _lloyd_update(assigned: DataFrame, key: Column, books: _Books) -> _Books:
+    """The one exact centroid update of both trainers.  ``books`` are
+    codebooks over consecutive slices of the embedding (k-means: one
+    over all of it; PQ: _PQ_M of dim/_PQ_M each); ``assigned`` carries
+    each vector's ``embedding``, and ``key`` names the cell each
+    component averages into — it may read the component's ``pos``
+    (PQ: the code of that component's subspace).  Every component is
+    an EXACT decimal mean over one posexplode → groupBy(key, pos) →
+    money_avg job for all books — order-insensitive, so the trained
+    codebook is bit-identical run to run and the operators are
+    golden-snapshot-able.  A cell no vector chose keeps its previous
+    centroid (deterministic)."""
+    means = {
+        (r.key, r.pos): r.mean_v
+        for r in assigned.select("*", F.posexplode("embedding").alias("pos", "v"))
+        .groupBy(key.alias("key"), "pos")
+        .agg(money_avg("v").alias("mean_v"))
+        .collect()
+    }
+    out, lo = [], 0
+    for book in books:
+        hi = lo + len(book[0][1])
+        out.append(
+            [
+                (cid, [means[(cid, p)] for p in range(lo, hi)])
+                if (cid, lo) in means
+                else (cid, prev)
+                for cid, prev in book
+            ]
+        )
+        lo = hi
+    return out
+
+
 def _train_centroids(
     emb: DataFrame, k: int = _KM_K
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's training.
 
-    Init = the k smallest vec_ids' embeddings (no RNG; default
-    k = _KM_K, the fixture-pinned codebook size — pass
+    Init = the k smallest vec_ids' embeddings (``_init_codebook``; no
+    RNG; default k = _KM_K, the fixture-pinned codebook size — pass
     _adaptive_k(n) to scale the cell count with the corpus; a corpus
     of fewer than k vectors trains fewer than k centroids).  Each
     round: assign against the current codebook list (_assign_cells,
-    the map-only GEMM above), then recompute every centroid component
-    as an EXACT decimal mean over a posexplode → groupBy (cent, pos)
-    aggregate — order-insensitive, so the trained codebook is
-    bit-identical run to run and the operator is golden-snapshot-able.
-    The codebook is model-sized
-    (k × dim doubles): collecting it to the driver is O(1) in the
-    data, the same at 100 TB as at sf0.001.  Scale-up swaps: k-means||
-    init and mini-batch updates keep the identical DataFrame shapes.
+    the map-only GEMM above), then recompute every centroid as an
+    exact decimal mean (``_lloyd_update``).  The codebook is
+    model-sized (k × dim doubles): collecting it to the driver is O(1)
+    in the data, the same at 100 TB as at sf0.001.  Scale-up swaps:
+    k-means|| init and mini-batch updates keep the identical DataFrame
+    shapes.
     """
-    dim = len(emb.select("embedding").first()[0])
-    init = emb.orderBy("vec_id").limit(k).collect()
-    cents = [
-        (i, [float(x) for x in r.embedding]) for i, r in enumerate(init)
-    ]
+    cents = _init_codebook(emb, k)
     for _ in range(_KM_ITERS):
-        assigned = _assign_cells(emb, cents)
-        comp = (
-            assigned.select("cell", F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(money_avg("v").alias("mean_v"))
-            .collect()
+        (cents,) = _lloyd_update(
+            _assign_cells(emb, cents), F.col("cell"), [cents]
         )
-        by_cell: dict[int, list[float]] = {}
-        for r in comp:
-            by_cell.setdefault(r.cell, [0.0] * dim)[r.pos] = r.mean_v
-        # empty cluster → keep its previous centroid (deterministic)
-        cents = [(cid, by_cell.get(cid, prev)) for cid, prev in cents]
     return cents
+
+
+def _probe_vector(emb: DataFrame) -> list[float]:
+    """The probe (vec_id = _PROBE_VEC_ID) embedding, driver-side."""
+    return [
+        float(x)
+        for x in emb.filter(F.col("vec_id") == _PROBE_VEC_ID)
+        .select("embedding")
+        .first()[0]
+    ]
+
+
+def _probe_sim(probe: list[float]) -> Column:
+    """Exact rerank score: ``embedding`` · probe, rounded, as ``sim``."""
+    return sim_round(
+        dot_f("embedding", F.array(*[F.lit(x) for x in probe]))
+    ).alias("sim")
+
+
+def _probed_cells(
+    cents: list[tuple[int, list[float]]], probe: list[float]
+) -> list[tuple[int, list[float]]]:
+    """The _KM_NPROBE cells a probe scans: ranked by (−q·c, cent_id)
+    driver-side, from the already-driver-resident codebook."""
+    return sorted(cents, key=lambda c: (-_dot(c[1], probe), c[0]))[
+        :_KM_NPROBE
+    ]
 
 
 @query("sim_knn_ivf_kmeans", oracle=None, tier="P2")
@@ -622,31 +693,15 @@ def sim_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load(spark, sf_dir, "embeddings")
     cents = _train_centroids(emb)
-    cells = _assign_cells(emb, cents)
-    probe_emb = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == _PROBE_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
-    ranked = sorted(
-        cents,
-        key=lambda c: (-sum(a * b for a, b in zip(c[1], probe_emb)), c[0]),
-    )
-    probe_cells = [cid for cid, _ in ranked[:_KM_NPROBE]]
+    probe = _probe_vector(emb)
+    probe_cells = [cid for cid, _ in _probed_cells(cents, probe)]
     return (
-        cells.filter(
+        _assign_cells(emb, cents)
+        .filter(
             F.col("cell").isin(probe_cells)
             & (F.col("vec_id") != _PROBE_VEC_ID)
         )
-        .select(
-            "vec_id",
-            "label",
-            "cell",
-            sim_round(
-                dot_f("embedding", F.array(*[F.lit(x) for x in probe_emb]))
-            ).alias("sim"),
-        )
+        .select("vec_id", "label", "cell", _probe_sim(probe))
         .orderBy(F.col("sim").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -662,142 +717,119 @@ _PQ_ITERS = 3
 _PQ_RERANK = 100  # ADC candidate pool handed to the exact reranker
 
 
-def _pq_subvectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, sub_id, subvec) — every vector split into _PQ_M
-    contiguous subspace slices, ALL subspaces in one frame so each
-    training round is one Spark job regardless of M."""
-    subs = F.explode(
-        F.expr(
-            f"transform(sequence(0, {_PQ_M - 1}), m -> struct("
-            f"m AS sub_id, slice(embedding, m * (size(embedding) div {_PQ_M})"
-            f" + 1, size(embedding) div {_PQ_M}) AS subvec))"
+
+def _pq_encode(emb: DataFrame, books: _Books) -> DataFrame:
+    """Product-quantize every vector: ``emb``'s rows plus ``codes``,
+    the _PQ_M per-subspace codes (the persisted index row).  One
+    ``mapInPandas`` pass calls the nearest kernel once per subspace
+    with bias ‖c‖²/2 (a sequential double sum per centroid), so each
+    code is the L2-nearest centroid of its subvector, ties to the
+    HIGHEST cent_id — the ``_assign_cells`` path with PQ's bias:
+    map-only, no codebook join, no per-row interpreted dot."""
+    import numpy as np
+
+    tables, lo = [], 0
+    for book in books:
+        order = sorted(book)
+        hi = lo + len(order[0][1])
+        tables.append(
+            (
+                lo,
+                hi,
+                np.array([cid for cid, _ in order], dtype=np.int32),
+                np.array([c for _, c in order], dtype=np.float64),
+                np.array([sum(x * x for x in c) / 2.0 for _, c in order]),
+            )
         )
-    ).alias("s")
-    return emb.select("vec_id", subs).select(
-        "vec_id", F.col("s.sub_id").alias("sub_id"), F.col("s.subvec").alias("subvec")
-    )
+        lo = hi
+
+    def encode(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            codes = np.stack(
+                [
+                    ids[_nearest2(E[:, lo:hi], C, bias)[0]]
+                    for lo, hi, ids, C, bias in tables
+                ],
+                axis=1,
+            )
+            yield pdf.assign(codes=list(codes))
+
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in emb.schema)
+    return emb.mapInPandas(encode, schema=f"{cols}, codes array<int>")
 
 
-def _pq_assign(subs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest centroid per (vec_id, sub_id) in L2, via the MIPS
-    identity argmin ||x-c||² = argmax (x·c − ||c||²/2): one dot_f per
-    (row × K) against a broadcast codebook joined on sub_id, then a
-    struct-max.  Ties break to the higher cent_id (struct max),
-    deterministically — the same rule as _assign_cells."""
-    scored = subs.join(F.broadcast(cents), "sub_id").select(
-        "vec_id",
-        "sub_id",
-        "cent_id",
-        (dot_f("subvec", "c_emb") - F.col("c_half_norm2")).alias("score"),
-    )
-    return (
-        scored.groupBy("vec_id", "sub_id")
-        .agg(F.max(F.struct(F.col("score"), F.col("cent_id"))).alias("best"))
-        .select("vec_id", "sub_id", F.col("best.cent_id").alias("code"))
-    )
-
-
-def _pq_train(
-    spark: SparkSession, subs: DataFrame
-) -> list[tuple[int, int, list[float]]]:
-    """Deterministic per-subspace Lloyd's — identical discipline to
-    _train_centroids (no-RNG init from the _PQ_K smallest vec_ids,
-    exact decimal component means, empty cell keeps its centroid) but
-    run for ALL _PQ_M subspaces per job: rows are (sub_id, ...), so
-    one assign + one mean job per round covers every codebook.  The
-    full codebook is M × K × (dim/M) doubles = one vector-width × K —
-    model-sized, O(1) in the corpus, collected to the driver exactly
-    like the IVF codebook."""
-    init = (
-        subs.withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy("sub_id").orderBy("vec_id")),
-        )
-        .filter(F.col("rk") <= _PQ_K)
-        .orderBy("sub_id", "rk")
-        .collect()
-    )
-    cents = [
-        (r.sub_id, int(r.rk) - 1, [float(x) for x in r.subvec]) for r in init
+def _pq_train(emb: DataFrame) -> _Books:
+    """Deterministic per-subspace Lloyd's — ``_train_centroids``'s
+    init and update, run for ALL _PQ_M subspaces per job: the init
+    slices the _PQ_K smallest vec_ids' embeddings (``_init_codebook``)
+    into per-subspace codebooks, each round encodes with the map-only
+    ``_pq_encode`` and moves every codebook through one
+    ``_lloyd_update`` job keyed on the code of each component's
+    subspace.  The full codebook is M × K × (dim/M) doubles = one
+    vector-width × K — model-sized, O(1) in the corpus, collected to
+    the driver exactly like the IVF codebook."""
+    init = _init_codebook(emb, _PQ_K)
+    dim_per = len(init[0][1]) // _PQ_M
+    books = [
+        [(cid, v[m * dim_per : (m + 1) * dim_per]) for cid, v in init]
+        for m in range(_PQ_M)
     ]
-    schema = "sub_id int, cent_id int, c_emb array<double>"
-
-    def with_norms(cs):
-        rows = [
-            (s, c, v, sum(x * x for x in v) / 2.0) for s, c, v in cs
-        ]
-        return spark.createDataFrame(
-            rows, schema + ", c_half_norm2 double"
-        )
-
+    code_of_pos = F.expr(f"codes[pos div {dim_per}]")
     for _ in range(_PQ_ITERS):
-        assigned = _pq_assign(subs, with_norms(cents)).join(
-            subs, ["vec_id", "sub_id"]
-        )
-        comp = (
-            assigned.select(
-                "sub_id", "code", F.posexplode("subvec").alias("pos", "v")
-            )
-            .groupBy("sub_id", "code", "pos")
-            .agg(money_avg("v").alias("mean_v"))
-            .collect()
-        )
-        dim_per = len(cents[0][2])
-        by_key: dict[tuple[int, int], list[float]] = {}
-        for r in comp:
-            by_key.setdefault((r.sub_id, r.code), [0.0] * dim_per)[r.pos] = (
-                r.mean_v
-            )
-        cents = [
-            (s, c, by_key.get((s, c), prev)) for s, c, prev in cents
-        ]
-    return cents
+        books = _lloyd_update(_pq_encode(emb, books), code_of_pos, books)
+    return books
 
 
-def _pq_codes(
-    spark: SparkSession,
-    subs: DataFrame,
-    cents: list[tuple[int, int, list[float]]],
-) -> DataFrame:
-    """(vec_id, codes) — assign every subvector to its nearest
-    codebook centroid and pack the M codes into one array column (the
-    persisted index row).  Shared by the flat-PQ op and the IVF-PQ
-    composition."""
-    cents_df = spark.createDataFrame(
-        [(s, c, v, sum(x * x for x in v) / 2.0) for s, c, v in cents],
-        "sub_id int, cent_id int, c_emb array<double>, c_half_norm2 double",
-    )
-    return (
-        _pq_assign(subs, cents_df)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                lambda s: s.getField("code"),
-            ).alias("codes")
-        )
-    )
-
-
-def _pq_adc_expr(
-    probe: list[float], cents: list[tuple[int, int, list[float]]]
-) -> Column:
+def _pq_adc_expr(probe: list[float], books: _Books) -> Column:
     """The ADC score as an UNROLLED sum of M element_at lookups into
     driver-inlined distance-table array literals (scalar terms per the
     CLAUDE.md lambda rule): dtab[m][k] = q_m · c_{m,k}, so
     Σ_m dtab[m][code_m] reconstructs q·x (or q·r for residual
-    codebooks) up to quantization error — map-only, no join."""
+    codebooks) up to quantization error — map-only, no join.  Each
+    table spans its trained codebook's cent_ids 0..k−1, so a corpus of
+    fewer than _PQ_K vectors gets a shorter table."""
     dim_per = len(probe) // _PQ_M
-    dtab: dict[tuple[int, int], float] = {}
-    for s, c, v in cents:
-        q_m = probe[s * dim_per : (s + 1) * dim_per]
-        dtab[(s, c)] = sum(a * b for a, b in zip(q_m, v))
     adc = None
-    for m in range(_PQ_M):
-        arr = F.array(*[F.lit(dtab[(m, k)]) for k in range(_PQ_K)])
+    for m, book in enumerate(books):
+        q_m = probe[m * dim_per : (m + 1) * dim_per]
+        arr = F.array(*[F.lit(_dot(q_m, v)) for _, v in sorted(book)])
         term = F.element_at(arr, F.col("codes").getItem(m) + 1)
         adc = term if adc is None else adc + term
     return adc
+
+
+def _adc_rerank(
+    codes: DataFrame,
+    emb: DataFrame,
+    probe: list[float],
+    adc: Column,
+    *carry: str,
+) -> DataFrame:
+    """The query tail of both PQ ops: top-_PQ_RERANK of ``codes`` by
+    ADC score (a map-only codegen scan of the codes), then exact-dot
+    rerank of that pool's full vectors, top-10.  ``carry`` columns of
+    ``codes`` ride through to the output."""
+    cands = (
+        codes.filter(F.col("vec_id") != _PROBE_VEC_ID)
+        .select("vec_id", *carry, adc.alias("adc"))
+        .orderBy(F.col("adc").desc(), F.col("vec_id"))
+        .limit(_PQ_RERANK)
+    )
+    return (
+        cands.join(emb, "vec_id")
+        .select(
+            "vec_id",
+            "label",
+            *carry,
+            sim_round(F.col("adc")).alias("adc_sim"),
+            _probe_sim(probe),
+        )
+        .orderBy(F.col("sim").desc(), F.col("vec_id"))
+        .limit(10)
+    )
 
 
 @query("sim_pq_adc", oracle=None, tier="P2")
@@ -810,9 +842,9 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_PQ_RERANK}-row candidate pool ever touches full vectors.
 
     Index build (once per corpus): per-subspace k-means codebooks
-    (_pq_train), then one assign pass encodes every vector —
-    groupBy(vec_id) packs the M codes into a single array column, the
-    persisted index row.  Query: the probe's distance table
+    (_pq_train), then one map-only ``_pq_encode`` pass packs every
+    vector's M codes into a single array column, the persisted index
+    row.  Query: the probe's distance table
     dtab[m][k] = q_m · c_{{m,k}} is M × K = {_PQ_M * _PQ_K} doubles,
     computed driver-side from the already-driver-resident codebook and
     inlined as array LITERALS — the ADC score is then an UNROLLED sum
@@ -821,7 +853,8 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with NO join and NO shuffle: inner products are additive
     across subspaces, so Σ_m dtab[m][code_m] reconstructs q·x up to
     quantization error.  Top-{_PQ_RERANK} by ADC score, exact-dot
-    rerank of those {_PQ_RERANK} full vectors, top-10 out.
+    rerank of those {_PQ_RERANK} full vectors, top-10 out
+    (``_adc_rerank``).
 
     Rows-only t2 check (k-means training is iterative, not
     SQL-expressible); determinism, code-domain validity, ADC-vs-exact
@@ -829,34 +862,11 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_properties.py.
     """
     emb = load(spark, sf_dir, "embeddings")
-    subs = _pq_subvectors(emb).localCheckpoint()  # feeds every round
-    cents = _pq_train(spark, subs)
-    codes = _pq_codes(spark, subs, cents)
-    probe = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == _PROBE_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
-    adc = _pq_adc_expr(probe, cents)
-    cands = (
-        codes.filter(F.col("vec_id") != _PROBE_VEC_ID)
-        .select("vec_id", adc.alias("adc"))
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(_PQ_RERANK)
-    )
-    return (
-        cands.join(emb, "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            sim_round(F.col("adc")).alias("adc_sim"),
-            sim_round(
-                dot_f("embedding", F.array(*[F.lit(x) for x in probe]))
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(10)
+    vecs = emb.select("vec_id", "embedding")
+    books = _pq_train(vecs)
+    probe = _probe_vector(emb)
+    return _adc_rerank(
+        _pq_encode(vecs, books), emb, probe, _pq_adc_expr(probe, books)
     )
 
 
@@ -876,8 +886,9 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid (one broadcast join + zip_with per corpus row — a
     vector-width column op, not pair work), then train the shared
     residual codebooks and pack 4-bit codes (the shared ``_pq_train``
-    / ``_pq_codes``).  The persisted row is (vec_id, cell, codes) —
-    4 bytes of code + a cell id per 256-byte vector.
+    / ``_pq_encode``, whose map-only pass carries the cell through).
+    The persisted row is (vec_id, cell, codes) — 4 bytes of code + a
+    cell id per 256-byte vector.
 
     Query (all decisions driver-side from the model-sized codebooks):
     rank cells by q·c, probe the top {_KM_NPROBE}; the inner-product
@@ -887,11 +898,11 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell CONSTANT (a {_KM_NPROBE}-arm CASE of literals).  The scan
     is then: partition-prune to probed cells, map-only codegen ADC
     over codes, top-{_PQ_RERANK} pool, exact rerank of the pool's full
-    vectors, top-10.  No join, no shuffle at query time beyond the
-    top-k.  At 100 TB: cell = partition key prunes ~(k−nprobe)/k of
-    the corpus at the storage layer; the in-cell scan reads 4-byte
-    codes, not vectors — the two savings MULTIPLY, which is the whole
-    point of the composition.
+    vectors, top-10 (``_adc_rerank``).  No join, no shuffle at query
+    time beyond the top-k.  At 100 TB: cell = partition key prunes
+    ~(k−nprobe)/k of the corpus at the storage layer; the in-cell scan
+    reads 4-byte codes, not vectors — the two savings MULTIPLY, which
+    is the whole point of the composition.
 
     Rows-only t2 check (two iterative k-means trainings); recall@10 vs
     bruteforce, candidate-confinement-to-probed-cells, and determinism
@@ -902,9 +913,9 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse_df = spark.createDataFrame(
         coarse, "cent_id int, c_emb array<double>"
     )
-    cells = _assign_cells(emb, coarse)
     resid = (
-        cells.join(
+        _assign_cells(emb, coarse)
+        .join(
             F.broadcast(
                 coarse_df.select(
                     F.col("cent_id").alias("cell"),
@@ -920,56 +931,25 @@ def sim_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "embedding", "c_emb", lambda a, b: a - b
             ).alias("embedding"),
         )
+        .localCheckpoint()  # feeds every round
     )
-    subs = _pq_subvectors(resid).localCheckpoint()  # feeds every round
-    cents = _pq_train(spark, subs)
-    codes = _pq_codes(spark, subs, cents).join(
-        cells.select("vec_id", "cell"), "vec_id"
-    )
+    books = _pq_train(resid)
 
-    probe = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == _PROBE_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
-    ranked = sorted(
-        coarse,
-        key=lambda c: (-sum(a * b for a, b in zip(c[1], probe)), c[0]),
-    )
-    probed = ranked[:_KM_NPROBE]
+    probe = _probe_vector(emb)
+    probed = _probed_cells(coarse, probe)
     cell_term = None
     for cid, cvec in probed:
-        qc = F.lit(sum(a * b for a, b in zip(probe, cvec)))
+        qc = F.lit(_dot(probe, cvec))
         cell_term = (
             F.when(F.col("cell") == cid, qc)
             if cell_term is None
             else cell_term.when(F.col("cell") == cid, qc)
         )
-    adc = cell_term + _pq_adc_expr(probe, cents)
-    cands = (
-        codes.filter(
-            F.col("cell").isin([cid for cid, _ in probed])
-            & (F.col("vec_id") != _PROBE_VEC_ID)
-        )
-        .select("vec_id", "cell", adc.alias("adc"))
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(_PQ_RERANK)
+    adc = cell_term + _pq_adc_expr(probe, books)
+    codes = _pq_encode(
+        resid.filter(F.col("cell").isin([cid for cid, _ in probed])), books
     )
-    return (
-        cands.join(emb, "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            "cell",
-            sim_round(F.col("adc")).alias("adc_sim"),
-            sim_round(
-                dot_f("embedding", F.array(*[F.lit(x) for x in probe]))
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(10)
-    )
+    return _adc_rerank(codes, emb, probe, adc, "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -980,10 +960,6 @@ _LSH_BITS = 6  # base bucket bits per band (64 buckets at fixture scale)
 _LSH_MAX_BITS = 20  # up to 14 extra planes gated in by corpus size
 _LSH_DIM = 64
 _LSH_TAU = 0.3
-# Hard cap on exact-duplicate multiplicity the collapse will carry in
-# one members array (~80 MB of int64 vec_ids at the cap) — see the
-# assert_true guard in sim_lsh_rp_pairs.
-_COLLAPSE_MAX_MULT = 10_000_000
 # Bucket-count ladder, same discipline as _ADAPT_LADDER: the bucket
 # count per band doubles each time the corpus crosses a size threshold,
 # so band-bucket size stays bounded as data grows (a fixed 64-bucket
@@ -1153,6 +1129,7 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from powertrainstreaming_spark.operators.dedup import (
         _band_explode,
+        _collapse_cap,
         _first_match_band_join,
     )
 
@@ -1185,26 +1162,11 @@ def sim_lsh_rp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100x/1000x clone depths, but a corpus with a ~10^7-fold verbatim
     # clone would put an ~80 MB array in a single aggregation row and
     # stress that task's memory before anything else in the plan.
-    # Fail LOUDLY there instead of degrading: assert_true evaluates
-    # JVM-side per group (returns NULL on success, so the filter keeps
-    # every row and adds nothing to the result); being a filter
-    # predicate it cannot be pruned away like a dropped column would
-    # be.  Beyond the cap the right plan is a two-level collapse
-    # (collect per (embedding, salt), then merge) — not needed until a
-    # real corpus shows such a group.
-    grp = grp.filter(
-        F.assert_true(
-            F.col("m") <= F.lit(_COLLAPSE_MAX_MULT),
-            F.concat(
-                F.lit(
-                    "rp_pairs duplicate-collapse cap exceeded: one "
-                    "embedding has multiplicity "
-                ),
-                F.col("m").cast("string"),
-                F.lit(f" > {_COLLAPSE_MAX_MULT}"),
-            ),
-        ).isNull()
-    )
+    # Fail LOUDLY there instead of degrading (the near-dup family's one
+    # cap, ``_collapse_cap``).  Beyond the cap the right plan is a
+    # two-level collapse (collect per (embedding, salt), then merge) —
+    # not needed until a real corpus shows such a group.
+    grp = grp.filter(_collapse_cap("rp_pairs", "embedding"))
     # Wide signature layout: compute each band's sig ONCE as a plain
     # column; _band_explode then lays out (band, sig) rows carrying
     # every EARLIER band's sig, the input of the MinHash family's

@@ -147,7 +147,8 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for repeated joins on the same key.
 
     Both orders and customer are written bucketed by the join key
-    (bucketBy + sortBy + saveAsTable); reading them back, the join and
+    (bucketBy + sortBy + saveAsTable, as external tables under a
+    scratch dir); reading them back, the join and
     the per-key aggregation reuse the bucketing: no shuffle Exchange
     anywhere in the plan (asserted in tests/test_properties.py; the
     tiny dim side still broadcasts, which is replication, not a
@@ -156,13 +157,15 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join/agg on that key into a zero-shuffle stage — you pay the
     shuffle once at write time instead of per query.
     """
-    # uuid table names: managed-table locations persist in the
-    # warehouse dir across sessions, so a restarting counter would hit
-    # LOCATION_ALREADY_EXISTS on the second process.
+    # EXTERNAL tables under a scratch dir (``path`` option), reaped at
+    # process exit; managed tables would land in the cwd's warehouse
+    # dir and outlive the process.  uuid names keep each call's catalog
+    # entries apart for the session's lifetime.
     import uuid
 
     n = uuid.uuid4().hex[:12]
     t_orders, t_cust = f"pts_b_orders_{n}", f"pts_b_cust_{n}"
+    out = scratch_dir(prefix="pts_bucketed_")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -171,12 +174,14 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.write.mode("overwrite")
         .bucketBy(_BUCKETS, "o_custkey")
         .sortBy("o_custkey")
+        .option("path", os.path.join(out, "orders"))
         .saveAsTable(t_orders)
     )
     (
         customer.write.mode("overwrite")
         .bucketBy(_BUCKETS, "c_custkey")
         .sortBy("c_custkey")
+        .option("path", os.path.join(out, "customer"))
         .saveAsTable(t_cust)
     )
     bo = spark.table(t_orders)

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from powertrainstreaming_spark.scratch import scratch_dir
@@ -63,17 +63,23 @@ def source_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_bounded(events_stream(spark, sf_dir), "append")
 
 
-def tumbling_transform(s: DataFrame) -> DataFrame:
-    """The tumbling-window aggregation, source-agnostic (batch or
-    stream, single- or multi-batch replay — the N-way equivalence tests
-    reuse it verbatim)."""
-    agg = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
+def _window_agg(s: DataFrame, window: Column) -> DataFrame:
+    """The one windowed count + money_sum per (window, event_type)
+    body of the tumbling, sliding, watermarked and update-mode ops."""
+    agg = s.groupBy(window.alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         money_sum("value").alias("sum_value"),
     )
     return agg.select(
         F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
     )
+
+
+def tumbling_transform(s: DataFrame) -> DataFrame:
+    """The tumbling-window aggregation, source-agnostic (batch or
+    stream, single- or multi-batch replay — the N-way equivalence tests
+    reuse it verbatim)."""
+    return _window_agg(s, F.window("ts", "1 hour"))
 
 
 @query("stream_tumbling_agg", oracle=_TUMBLING_ORACLE, tier="P0")
@@ -121,21 +127,15 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sliding_transform(s: DataFrame) -> DataFrame:
-    agg = s.groupBy(
-        F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        money_sum("value").alias("sum_value"),
-    )
-    return agg.select(
-        F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-    )
+    return _window_agg(s, F.window("ts", "1 hour", "15 minutes"))
 
 
 _SESSION_GAP_SQL = "INTERVAL '30 minutes'"
 
-_SESSION_ORACLE = f"""
-    WITH marked AS (
+# Shared sessionization CTEs (lag gap marker + running session
+# number) — used verbatim by the session-window and stateful-timeout
+# oracles so the two can never drift.
+_SESSION_NUMBERED_CTE = f"""marked AS (
         SELECT user_id, ts, event_id, value,
                CASE WHEN lag(ts) OVER w IS NULL
                          OR ts - lag(ts) OVER w >= {_SESSION_GAP_SQL}
@@ -154,7 +154,10 @@ _SESSION_ORACLE = f"""
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
         ) AS session_no
         FROM marked
-    )
+    )"""
+
+_SESSION_ORACLE = f"""
+    WITH {_SESSION_NUMBERED_CTE}
     SELECT user_id,
            MIN(ts) AS session_start,
            MAX(ts) + {_SESSION_GAP_SQL} AS session_end,
@@ -310,15 +313,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def watermark_late_transform(s: DataFrame) -> DataFrame:
-    agg = s.withWatermark("ts", "10 minutes").groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        money_sum("value").alias("sum_value"),
-    )
-    return agg.select(
-        F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-    )
+    return tumbling_transform(s.withWatermark("ts", "10 minutes"))
 
 
 @query(
@@ -337,14 +332,7 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the remaining mode.
     """
     s = staged_events_stream(spark, stage_events_nway(sf_dir, 2))
-    agg = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        money_sum("value").alias("sum_value"),
-    )
-    flat = agg.select(
-        F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-    )
-    sink = run_bounded(flat, "update")
+    sink = run_bounded(tumbling_transform(s), "update")
     return sink.groupBy("window_start", "event_type").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("sum_value", "n_events").alias("sum_value"),
@@ -442,22 +430,7 @@ def collapse_running_sink(sink: DataFrame) -> DataFrame:
 
 
 _TIMEOUT_ORACLE = f"""
-    WITH marked AS (
-        SELECT user_id, ts, event_id, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w >= {_SESSION_GAP_SQL}
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-        -- (ts, event_id) tie-break must match marked's window — see
-        -- _SESSION_ORACLE's note on the ROWS-frame tie latent.
-        SELECT *, SUM(is_new) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-        ) AS session_no
-        FROM marked
-    ), sess AS (
+    WITH {_SESSION_NUMBERED_CTE}, sess AS (
         SELECT user_id, session_no,
                MAX(session_no) OVER (PARTITION BY user_id) AS last_session,
                MIN(ts) AS session_start,

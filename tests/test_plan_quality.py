@@ -457,6 +457,25 @@ def test_centroid_assign_is_never_nested_loop(spark, name):
     assert "BroadcastNestedLoopJoin" not in final_plan
 
 
+@pytest.mark.parametrize("name", ["sim_pq_adc", "sim_knn_ivf_pq"])
+def test_pq_encode_never_joins_the_codebook(spark, name):
+    """PQ codes come from the map-only encode (similarity._pq_encode,
+    the _assign_cells kernel with an L2 bias): a codebook joined on
+    the subspace id would score n·M·K rows with an interpreted dot
+    each — the cross product the one-assign rule forbids, written as
+    an equi-join the nested-loop check cannot see.  No join in the
+    final plan may be keyed on `sub_id`."""
+    import re
+
+    final_plan = _final_plan(all_defs()[name].fn(spark, SF))
+    joins = re.findall(
+        r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[[^\]]*\]",
+        final_plan,
+    )
+    assert not [j for j in joins if "sub_id" in j], joins
+    assert "MapInPandas" in final_plan
+
+
 @pytest.mark.parametrize(
     "name", ["dedup_embedding_cluster", "dedup_embedding_cluster_mp"]
 )

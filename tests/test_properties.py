@@ -237,6 +237,25 @@ def test_bucketed_join_has_no_shuffle_exchange(spark):
     assert "Bucketed: true" in plan
 
 
+def test_bucketed_join_leaves_no_warehouse_tables(spark):
+    """sink_bucketed_join writes its two bucketed tables under a
+    scratch dir (external tables, reaped at exit): the session's
+    warehouse dir gains no entry."""
+    import os
+    from urllib.parse import urlparse
+
+    from powertrainstreaming_spark.operators.sinks import sink_bucketed_join
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def entries():
+        return set(os.listdir(wh)) if os.path.isdir(wh) else set()
+
+    before = entries()
+    assert sink_bucketed_join(spark, SF).count() > 0
+    assert entries() == before
+
+
 def test_salted_join_matches_plain_join(spark):
     """Salting is result-invariant: the salted join equals the plain
     join under the canonical hash."""
@@ -2489,15 +2508,23 @@ def test_semantic_cluster_exact_collapse_on_cloned_corpus(spark):
 
 
 def test_assign_cells_matches_sequential_fold_reference(spark):
-    """_assign_cells' `cell` and `cell2` must equal an independent
-    driver-side ranking: each vector dotted with each centroid as a
-    sequential double sum (dot_f's fold order), ranked by (sim desc,
-    cent_id desc).  The codebook is a k = 20 trained one plus a copy
-    of one centroid under a new cent_id, so exact ties occur (asserted)
-    and the highest-cent_id tie-break is exercised for both cells; a
-    one-centroid codebook must give cell = cell2 = its only id."""
+    """Both users of the one nearest kernel must equal an independent
+    driver-side ranking over sequential double sums (dot_f's fold
+    order), ranked by (score desc, cent_id desc):
+    - _assign_cells' `cell` and `cell2`, score = e · c.  The codebook
+      is a k = 20 trained one plus a copy of one centroid under a new
+      cent_id, so exact ties occur (asserted) and the highest-cent_id
+      tie-break is exercised for both cells; a one-centroid codebook
+      must give cell = cell2 = its only id.
+    - _pq_encode's `codes`, score = e_m · c − ‖c‖²/2 per subspace m
+      (L2-nearest).  The trained PQ codebooks get a copy of one
+      subspace's most-chosen centroid under a new cent_id, so that
+      subspace has exact ties (asserted) the copy must win."""
     from powertrainstreaming_spark.operators.similarity import (
+        _PQ_M,
         _assign_cells,
+        _pq_encode,
+        _pq_train,
         _train_centroids,
     )
 
@@ -2540,6 +2567,48 @@ def test_assign_cells_matches_sequential_fold_reference(spark):
         for r in _assign_cells(emb, one).collect()
     }
     assert got1 == {vid: (7, 7) for vid in vecs}
+
+    pq_emb = emb.select("vec_id", "embedding")
+    books = _pq_train(pq_emb)
+    dim_per = len(books[0][0][1])
+
+    def pq_reference(books):  # per vector, per subspace: [(score, cent_id)]
+        return {
+            vid: [
+                sorted(
+                    (
+                        (
+                            fold(e[m * dim_per : (m + 1) * dim_per], c)
+                            - sum(x * x for x in c) / 2.0,
+                            cid,
+                        )
+                        for cid, c in book
+                    ),
+                    reverse=True,
+                )
+                for m, book in enumerate(books)
+            ]
+            for vid, e in vecs.items()
+        }
+
+    m_tie = _PQ_M // 2
+    pq_ref = pq_reference(books)
+    top = max(
+        (cid for cid, _ in books[m_tie]),
+        key=lambda cid: sum(r[m_tie][0][1] == cid for r in pq_ref.values()),
+    )
+    dup_id = max(cid for cid, _ in books[m_tie]) + 1
+    books[m_tie] = books[m_tie] + [(dup_id, dict(books[m_tie])[top])]
+    pq_ref = pq_reference(books)
+    ties = [r[m_tie] for r in pq_ref.values() if r[m_tie][0][0] == r[m_tie][1][0]]
+    assert ties and all(t[0][1] == dup_id for t in ties)  # real ties
+
+    got_pq = {
+        r.vec_id: list(r.codes) for r in _pq_encode(pq_emb, books).collect()
+    }
+    assert got_pq == {
+        vid: [sub[0][1] for sub in r] for vid, r in pq_ref.items()
+    }
 
 
 def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
@@ -2600,6 +2669,36 @@ def test_semantic_mp_survivors_subset_and_tau_consistent(spark):
             if probe_sets[u] & probe_sets[v]:
                 cos = round(float(np.dot(emb_by_id[u], emb_by_id[v])), 6)
                 assert cos < _EMB_TAU + eps, (u, v, cos)  # 3.
+
+
+def test_trained_ann_ops_run_on_a_corpus_smaller_than_a_codebook(
+    spark, tmp_path
+):
+    """A 5-vector corpus trains 5-centroid codebooks (the trainers
+    initialise from the k smallest vec_ids), fewer than _PQ_K = 16 and
+    _KM_K = 16: the PQ distance tables must span the trained ids only.
+    Every candidate pool then holds the whole scanned set, so each op
+    is an exact rerank: flat PQ returns all 4 non-probe vectors, and
+    IVF-PQ the same probed-cell vectors and sims as k-means IVF."""
+    from powertrainstreaming_spark.operators.similarity import (
+        _PROBE_VEC_ID,
+        sim_knn_ivf_kmeans,
+        sim_knn_ivf_pq,
+        sim_pq_adc,
+    )
+
+    five = load(spark, SF, "embeddings").orderBy("vec_id").limit(5)
+    ids = [r.vec_id for r in five.collect()]
+    assert _PROBE_VEC_ID in ids
+    five.write.parquet(str(tmp_path / "embeddings.parquet"))
+    sf = str(tmp_path)
+    ivf = [(r.vec_id, r.cell, r.sim) for r in sim_knn_ivf_kmeans(spark, sf).collect()]
+    assert 0 < len(ivf) < 5
+    ivf_pq = [(r.vec_id, r.cell, r.sim) for r in sim_knn_ivf_pq(spark, sf).collect()]
+    assert ivf_pq == ivf
+    pq = sim_pq_adc(spark, sf).collect()
+    assert sorted(r.vec_id for r in pq) == sorted(set(ids) - {_PROBE_VEC_ID})
+    assert [r.sim for r in pq] == sorted((r.sim for r in pq), reverse=True)
 
 
 def test_semantic_dedup_keeps_a_one_vector_corpus(spark, tmp_path):
